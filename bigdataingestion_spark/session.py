@@ -35,6 +35,14 @@ def get_spark(
         100 TB yields ~800k input splits — fine; AQE coalesces post-shuffle.
       - Arrow enabled so the pandas-UDF operators (dedup/similarity) move data
         in columnar batches, not pickled rows.
+      - Persisted plans coalesce: AQE may change a cached plan's output
+        partitioning, so ``.persist()`` of a shuffled frame keeps the
+        coalesced partition count instead of every shuffle partition.
+        Without it every later stage and write over a small persisted
+        frame (a MERGE resolution, a view refresh's delta) runs that
+        many tasks and can stage one file per partition. Spark reads the
+        setting only when planning a persisted frame, so plans that
+        persist nothing are unchanged.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     builder = (
@@ -42,6 +50,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

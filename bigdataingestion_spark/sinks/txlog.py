@@ -3141,15 +3141,6 @@ class TxLogTable:
             constraints=[c for c in cons if c[0] != name],
         )
 
-    @staticmethod
-    def _latest_wins(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
-        w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
     # ------------------------------------------------------------- ops --
     # Every op reads the log ONCE (snapshot()), derives txn ids / schema /
     # file list / version from that snapshot, and commits against the
@@ -3688,50 +3679,64 @@ class TxLogTable:
         pre-existing duplicate keys the source doesn't mention, in ANY
         mode (a whole-table dedup side effect would also be
         layout-dependent under pruning: duplicates split across
-        touched/untouched files would dedup partially).
+        touched/untouched files would dedup partially). Latest-wins
+        matches NULL keys to NULL keys (its window groups them);
+        source-wins never matches a NULL key and inserts every source
+        row, duplicates included.
 
-        Delta's MERGE cost shape: one finding scan locates the files that
-        contain keys present in the source; ONLY those files are merged
-        and rewritten, every other file carries into the new version by
-        reference, and pure inserts (no matching file) cost one new file.
-        A CDC micro-batch touching 0.1% of a 100 TB table rewrites 0.1%
-        of it — the pre-pruning implementation re-staged the entire
-        table per merge. Before the scan even starts, log-held per-file
-        key min/max stats (recorded at commit time from the parquet
-        footers, Delta's data-skipping stats) drop files whose key range
-        cannot intersect the source's — on a key-clustered layout the
-        finding pass then opens only the files a narrow batch plausibly
-        touches. Returns the committed version."""
+        Delta's MERGE cost shape: log-held per-file key min/max stats
+        (recorded at commit time from the parquet footers, Delta's
+        data-skipping stats) and bloom sidecars drop files whose keys
+        cannot intersect the source's; ONLY files that hold a source key
+        are rewritten, every other file carries into the new version by
+        reference, and pure inserts (no matching file) cost one new
+        file. A CDC micro-batch touching 0.1% of a 100 TB table rewrites
+        0.1% of it.
+
+        The merge resolves ONCE: the candidate target rows (tagged with
+        their file) unioned with the source, each row flagged by one
+        window over the keys with whether its key occurs on the other
+        side and whether it wins its key, in one persisted frame. The touched files, the three CDF classes and the staged
+        rows are all filters of it. When the pruned candidates total at
+        most ``_MERGE_ONE_PASS_MAX_BYTES`` (about one scan split) the
+        frame reads all of them and its matched rows name the touched
+        files, so no separate finding scan runs; a wider candidate set
+        first runs the finding scan and reads only the files it finds.
+        Returns the committed version."""
         snap = self.snapshot()
         if txn_id is not None and snap and txn_id in snap.txn_ids:
             return snap.version
         self._require_flat(snap)
-        if snap is not None and _identity_of(
-            StructType.fromJson(json.loads(snap.schema_json))
-        ):
-            # whole-row replacement cannot preserve the target's
-            # allocated values NOR allocate for inserts; the clause-based
-            # merge() treats identity correctly (carried on update,
-            # allocated on insert)
-            raise IdentityColumnViolationError(
-                f"table {self.path} declares identity column(s); use "
-                "merge(clauses=[when_matched_update(), "
-                "when_not_matched_insert()]) instead of merge_upsert"
-            )
-        # the merge consumes `source` several times (stats agg, finding
-        # semi-join, the merge itself, constraint + GENERATED probes);
-        # persist so an expensive upstream plan is computed once —
-        # MEMORY_AND_DISK spills rather than OOMs on a large batch. If
-        # the CALLER already persisted it, leave their cache alone (and
-        # intact afterwards). Persist BEFORE the generated-column
-        # validation: its limit(1) probe must see the SAME rows staging
-        # will, or a non-deterministic plan passes validation with one
-        # row set and commits another.
+        target_cols: list[str] = []
+        if snap is not None:
+            snap_schema = StructType.fromJson(json.loads(snap.schema_json))
+            if _identity_of(snap_schema):
+                # whole-row replacement cannot preserve the target's
+                # allocated values NOR allocate for inserts; the
+                # clause-based merge() treats identity correctly (carried
+                # on update, allocated on insert)
+                raise IdentityColumnViolationError(
+                    f"table {self.path} declares identity column(s); use "
+                    "merge(clauses=[when_matched_update(), "
+                    "when_not_matched_insert()]) instead of merge_upsert"
+                )
+            target_cols = [f.name for f in snap_schema.fields]
+        # the merge consumes `source` several times (stats agg, bloom
+        # probe, finding semi-join, the resolution, constraint +
+        # GENERATED probes); persist so an expensive upstream plan is
+        # computed once — MEMORY_AND_DISK spills rather than OOMs on a
+        # large batch. If the CALLER already persisted it, leave their
+        # cache alone (and intact afterwards). Persist BEFORE the
+        # generated-column validation: its limit(1) probe must see the
+        # SAME rows staging will, or a non-deterministic plan passes
+        # validation with one row set and commits another.
         ours = not source.storageLevel.useMemory and not source.storageLevel.useDisk
         if ours:
             source = source.persist()
         cached = source  # unpersist target: _apply_generated rebinds
         source = self._apply_generated(source, snap)
+        null_safe = bool(order_cols)
+        resolved = None
         try:
             touched: list[str] = []
             stat_skipped = 0
@@ -3740,85 +3745,132 @@ class TxLogTable:
             # the commit-time conflict check judges files added by WINNING
             # commits (which do carry stats) against the same bounds
             src_bounds = self._source_key_bounds(source, keys)
-            if snap is None or not snap.files:
-                merged = (
-                    self._latest_wins(source, keys, order_cols)
-                    if order_cols
-                    else source
-                )
-            else:
+            taken = [*target_cols, *source.columns]
+            fc = self._fresh_col("_file", taken)
+            side = self._fresh_col("_is_src", taken)
+            hit = self._fresh_col("_hit", taken)
+            win = self._fresh_col("_win", taken)
+            one_pass = False
+            tgt = None
+            if snap is not None and snap.files:
                 candidates = self._stats_candidates(
-                    snap, src_bounds, keys, null_safe=bool(order_cols)
+                    snap, src_bounds, keys, null_safe=null_safe
                 )
                 range_kept = len(candidates)
                 candidates = self._bloom_candidates(
-                    spark,
-                    snap,
-                    source,
-                    keys,
-                    candidates,
-                    src_bounds,
-                    null_safe=bool(order_cols),
+                    spark, snap, source, keys, candidates, src_bounds,
+                    null_safe=null_safe,
                 )
                 bloom_skipped = range_kept - len(candidates)
                 stat_skipped = len(snap.files) - len(candidates)
-                touched = self._files_with_matching_keys(
-                    spark,
-                    snap,
-                    source,
-                    keys,
-                    null_safe=bool(order_cols),
-                    candidates=candidates,
-                )
-                hit_rows = (
-                    self._read_files(spark, snap, touched)
-                    if touched
-                    else self._read_snapshot(spark, snap).limit(0)
-                )
-                if order_cols:
-                    # MERGE affects ONLY keys the source carries (Delta
-                    # semantics — it never dedups the target as a side
-                    # effect). Touched-file rows whose key is NOT in the
-                    # source must be rewritten (their file is) but pass
-                    # through VERBATIM, outside the latest-wins window:
-                    # funneling them through it would make the result
-                    # depend on which files the finding pass happened to
-                    # touch (duplicates split across touched/untouched
-                    # files would dedup partially — layout-dependent).
-                    skeys = source.select(*keys).distinct()
-                    cond = None
-                    for k in keys:
-                        c = hit_rows[k].eqNullSafe(skeys[k])
-                        cond = c if cond is None else cond & c
-                    matching = hit_rows.join(skeys, cond, "leftsemi")
-                    passthrough = hit_rows.join(skeys, cond, "leftanti")
-                    merged = self._latest_wins(
-                        matching.unionByName(source, allowMissingColumns=True),
-                        keys,
-                        order_cols,
-                    ).unionByName(passthrough, allowMissingColumns=True)
+                one_pass = self._merge_one_pass_ok(candidates)
+                if not one_pass:
+                    touched = self._files_with_matching_keys(
+                        spark, snap, source, keys, null_safe=null_safe,
+                        candidates=candidates,
+                    )
+                scan = candidates if one_pass else touched
+                if scan:
+                    tgt = self._read_files(
+                        spark, snap, scan, with_file_col=fc
+                    )
                 else:
-                    survivors = hit_rows.join(
-                        source.select(keys), on=keys, how="left_anti"
+                    tgt = self._read_snapshot(spark, snap).limit(0).withColumn(
+                        fc, F.lit(None).cast("string")
                     )
-                    merged = survivors.unionByName(
-                        source, allowMissingColumns=True
-                    )
+
+            # ---- the single resolution -------------------------------
+            # hit: the row's key occurs on the OTHER side (a matched
+            # target row / a source row updating an existing key);
+            # win: the row that represents its key after the merge
+            # (latest-wins: rank 1 over target ∪ source; source-wins:
+            # every source row, no target row). Touched-file rows whose
+            # key the source does not carry (hit false) pass through
+            # verbatim, outside any dedup: funneling them through the
+            # window would make the result depend on which files pruning
+            # kept.
+            frame = source.withColumn(side, F.lit(True)).withColumn(
+                fc, F.lit(None).cast("string")
+            )
+            if tgt is not None:
+                frame = tgt.withColumn(side, F.lit(False)).unionByName(
+                    frame, allowMissingColumns=True
+                )
+                by_key = Window.partitionBy(*keys)
+                other = F.when(
+                    F.col(side), ~F.min(side).over(by_key)
+                ).otherwise(F.max(side).over(by_key))
+                if not null_safe:
+                    # SQL equality: a NULL in any key column never matches
+                    for k in keys:
+                        other = other & F.col(k).isNotNull()
+                frame = frame.withColumn(hit, other)
+            else:
+                frame = frame.withColumn(hit, F.lit(False))
+            if order_cols:
+                rank = Window.partitionBy(*keys).orderBy(
+                    *[F.col(c).desc() for c in order_cols]
+                )
+                frame = frame.withColumn(win, F.row_number().over(rank) == 1)
+            else:
+                frame = frame.withColumn(win, F.col(side))
+            cdf_on = self._cdf_enabled(snap)
+            # more than one consumer reads the frame: persist it so the
+            # window runs once (the first consumer materializes it)
+            resolved = frame.persist() if (cdf_on or one_pass) else frame
+            is_src, is_hit, is_win = F.col(side), F.col(hit), F.col(win)
+            if one_pass:
+                touched_uris = sorted(
+                    r[0]
+                    for r in resolved.filter(~is_src & is_hit)
+                    .select(fc)
+                    .distinct()
+                    .collect()
+                )
+                hit_rel = {self._rel_from_uri(u) for u in touched_uris}
+                touched = [f for f in snap.files if f in hit_rel]
+            data_cols = [
+                c for c in resolved.columns if c not in (fc, side, hit, win)
+            ]
+            keep = is_win | (~is_src & ~is_hit)
+            if one_pass:
+                # candidate files nothing matched in carry by reference:
+                # their rows must not be re-staged
+                in_touched = (
+                    F.col(fc).isin(touched_uris) if touched_uris else F.lit(False)
+                )
+                keep = keep & (is_src | in_touched)
+            merged = resolved.filter(keep).select(*data_cols)
             # only the incoming rows need checking: every surviving target
             # row was validated by the commit that wrote it
             self._check_constraints(source, snap.constraints if snap else ())
             schema = self._next_schema(snap, source, merge_schema=True)
             cdf_map = None
-            if self._cdf_enabled(snap):
-                cdf_map = self._merge_cdf(
-                    source,
-                    keys,
-                    order_cols,
-                    hit_rows if (snap is not None and snap.files) else None,
-                    merged,
-                )
+            if cdf_on:
+                # Delta CDF's merge classes: matched target rows as
+                # update_preimage (target columns only), their resolved
+                # state as update_postimage, winners for previously-absent
+                # keys as insert. In latest-wins mode a matched key whose
+                # source row LOST the ordering appears with identical
+                # pre/post images (the merge made no logical change to it
+                # — documented).
+                classes = []
+                if tgt is not None:
+                    classes += [
+                        ("update_preimage", ~is_src & is_hit, target_cols),
+                        ("update_postimage", is_win & is_hit, data_cols),
+                    ]
+                classes.append(("insert", is_src & is_win & ~is_hit, data_cols))
+                cdf_map = {}
+                for name, cond, cols in classes:
+                    paths = self._stage_cdf(resolved.filter(cond).select(*cols))
+                    if paths:
+                        cdf_map[name] = paths
+                cdf_map = cdf_map or None
             files, fstats = self._stage_files(merged, write_schema=schema)
         finally:
+            if resolved is not None:
+                resolved.unpersist()
             if ours:
                 cached.unpersist()
 
@@ -3836,7 +3888,7 @@ class TxLogTable:
                         src_bounds,
                         self._stats_logical(cur.file_stats[f], p2l),
                         keys,
-                        bool(order_cols),
+                        null_safe,
                     )
                 )
             ]
@@ -3860,60 +3912,6 @@ class TxLogTable:
         )
         self._maybe_auto_compact(spark)
         return v
-
-    def _merge_cdf(
-        self,
-        source: DataFrame,
-        keys: list[str],
-        order_cols: list[str] | None,
-        hit_rows: DataFrame | None,
-        merged: DataFrame,
-    ) -> dict | None:
-        """Materialize MERGE change rows (Delta CDF's merge classes):
-        matched target rows as ``update_preimage``, their resolved new
-        state as ``update_postimage``, source rows for previously-absent
-        keys as ``insert``. In latest-wins mode a matched key whose
-        source row LOST the ordering appears with identical pre/post
-        images (the merge made no logical change to it — documented)."""
-        if hit_rows is None:  # empty table: everything the merge wrote
-            paths = self._stage_cdf(merged)  # is an insert
-            return {"insert": paths} if paths else None
-        null_safe = bool(order_cols)
-        skeys = source.select(*keys).distinct()
-        hkeys = hit_rows.select(*keys).distinct()
-
-        def _join(df, other, anti=False):
-            how = "leftanti" if anti else "leftsemi"
-            if null_safe:
-                cond = None
-                for k in keys:
-                    c = df[k].eqNullSafe(other[k])
-                    cond = c if cond is None else cond & c
-                return df.join(other, cond, how)
-            return df.join(other, on=keys, how=how)
-
-        pre = _join(hit_rows, skeys)
-        if order_cols:
-            winners = self._latest_wins(
-                pre.unionByName(source, allowMissingColumns=True),
-                keys,
-                order_cols,
-            )
-            post = _join(winners, hkeys)
-            ins = _join(winners, hkeys, anti=True)
-        else:
-            post = _join(source, hkeys)
-            ins = _join(source, hkeys, anti=True)
-        out = {}
-        for name, df in (
-            ("update_preimage", pre),
-            ("update_postimage", post),
-            ("insert", ins),
-        ):
-            paths = self._stage_cdf(df)
-            if paths:
-                out[name] = paths
-        return out or None
 
     def merge(
         self,

@@ -73,6 +73,21 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say when the run was the fast tier: how many slow-tier tests the
+    marker expression deselected, and how to run them."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"fast tier: {len(slow)} slow-tier tests deselected; "
+            "full tier: python -m pytest tests/ -q -m 'slow or not slow'"
+        )
+
+
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_CORRECT = os.path.join(TESTDATA, "sf0.01")

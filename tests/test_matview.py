@@ -840,3 +840,32 @@ def test_sql_aggregate_non_aggregate_expr_fails_loudly(spark, tmp_path):
     )
     with pytest.raises(AnalysisException):
         mv.build(spark)
+
+
+def test_refresh_of_few_groups_commits_at_most_parallelism_files(spark, tmp_path):
+    """Persisted plans coalesce (session.get_spark): a refresh whose
+    window moves ~15 groups stages its view rows from small persisted
+    frames, and AQE coalesces those like any other shuffle. With the
+    shuffle-partition count kept, the write would stage up to one file
+    per non-empty shuffle partition."""
+    src = _source(
+        spark, tmp_path,
+        rows=[(i, f"g{i % 60:02d}", float(i)) for i in range(600)],
+    )
+    mv = _additive(spark, tmp_path, src)
+    mv.build(spark)
+    src.merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [(i, f"g{i:02d}", -1.0) for i in range(15)],  # 15 groups
+            "id long, grp string, val double",
+        ),
+        keys=["id"],
+    )
+    mv.refresh(spark)
+    refresh = mv.view.history()[-1]
+    assert refresh["op"] == "merge"
+    assert 0 < len(refresh["add"]) <= spark.sparkContext.defaultParallelism
+    assert _rows(mv.read(spark), ["n", "s", "a"]) == _oracle(
+        spark, src, _add_oracle()
+    )

@@ -262,6 +262,57 @@ def test_merge_upsert_latest_wins_across_files(spark, tmp_path):
     assert _rows(t.read(spark)) == [(1, "b", 200)]
 
 
+def test_merge_upsert_resolves_data_and_cdf_once(spark, tmp_path):
+    """The staged rows and the CDF classes are filters of ONE latest-wins
+    resolution, so every update_postimage / insert row is exactly the row
+    read back for its key. The batch carries a key twice, a stale row, a
+    NULL key matching the table's NULL-key row and a new key; the table
+    spreads over a touched file (with a passthrough row), a NULL-key file
+    and a stat-skipped file."""
+    schema = "id int, v string, ts int"
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a", 10), (4, "keep4", 10)], schema).coalesce(1))
+    t.append(spark.createDataFrame([(2, "b", 100), (None, "nk", 10)], schema).coalesce(1))
+    t.append(spark.createDataFrame([(9, "keep9", 10)], schema).coalesce(1))
+    t.alter_properties({"cdf.enabled": "true"})
+    t.merge_upsert(
+        spark,
+        spark.createDataFrame(
+            [
+                (1, "a1", 20),
+                (1, "a2", 30),  # same key twice: the later ts wins
+                (2, "stale", 50),  # loses to the table's ts=100
+                (None, "nk2", 20),  # matches the NULL-key row
+                (3, "new", 5),
+            ],
+            schema,
+        ),
+        keys=["id"],
+        order_cols=["ts"],
+    )
+    m = t.history()[-1]["op_metrics"]
+    assert (m["files_rewritten"], m["files_carried"], m["files_stat_skipped"]) == (2, 1, 1)
+    final = {r["id"]: tuple(r) for r in t.read(spark).collect()}
+    assert sorted(final.values(), key=lambda r: (r[0] is not None, r[0] or 0)) == [
+        (None, "nk2", 20),
+        (1, "a2", 30),
+        (2, "b", 100),
+        (3, "new", 5),
+        (4, "keep4", 10),
+        (9, "keep9", 10),
+    ]
+    changes = {}
+    for r in t.read_cdf(spark, t.version() - 1).collect():
+        changes.setdefault(r["_change_type"], []).append((r["id"], r["v"], r["ts"]))
+    assert sorted(changes["update_preimage"], key=str) == sorted(
+        [(1, "a", 10), (2, "b", 100), (None, "nk", 10)], key=str
+    )
+    assert len(changes["update_postimage"]) == 3
+    assert changes["insert"] == [(3, "new", 5)]
+    for row in changes["update_postimage"] + changes["insert"]:
+        assert row == final[row[0]]
+
+
 def test_concurrent_writer_conflict(spark, tmp_path):
     t1 = TxLogTable(str(tmp_path / "t"))
     t2 = TxLogTable(str(tmp_path / "t"))
