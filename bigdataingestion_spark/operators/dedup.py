@@ -634,24 +634,6 @@ def connected_components(
     return labels.select("node", F.col("comp").alias("cluster_id"))
 
 
-def near_dedup_survivors(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    left: str = "id_a",
-    right: str = "id_b",
-) -> DataFrame:
-    """Keep one canonical document (min id) per near-dup cluster, plus every
-    document not in any cluster — the complete near-dedup pipeline:
-    pair generation (LSH / Jaccard) -> cluster resolution -> survivor
-    selection, all as DataFrame ops."""
-    cc = connected_components(pairs, left, right)
-    losers = cc.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias("_drop_id")
-    )
-    return df.join(losers, df[id_col] == F.col("_drop_id"), "left_anti")
-
-
 def contamination_hits(
     corpus: DataFrame,
     benchmark: DataFrame,

@@ -1,18 +1,13 @@
-"""[EXT] Skew-handling primitives: salted aggregation and salted joins.
+"""[EXT] Skew handling: the salt column for a two-phase aggregate.
 
 AQE's skew-join splitting (enabled in the session factory) handles most
-shuffle skew automatically, but two cases still need explicit salting at
-100 TB:
-
-  * **Skewed aggregation** — a single hot group key (one user producing 10%
-    of all events) lands on one reducer. ``salted_aggregate`` runs a
-    two-phase aggregate: phase 1 on (key, salt) spreads the hot key over
-    ``salt_buckets`` reducers; phase 2 merges the per-salt partials. Works
-    for any algebraic aggregate (sum/count/min/max — pass partial and merge
-    expressions).
-  * **Skewed join against a small-ish side** — replicate the small side per
-    salt value (explode) and salt the big side randomly; each hot-key row
-    joins exactly one replica.
+shuffle skew automatically, but a skewed aggregation does not split: a
+single hot group key (one user producing 10% of all events) lands on one
+reducer. ``with_salt`` attaches a salt column so the caller can aggregate
+in two phases: phase 1 groups by (key, salt) and spreads the hot key over
+``buckets`` reducers; phase 2 groups by key and merges the per-salt
+partials. This works for any algebraic aggregate (count/sum/min/max);
+``catalog.orders_salted_totals`` is the in-tree use.
 
 Salt derivation is ``pmod(hash(monotonically_increasing_id()), B)`` — no
 user-visible randomness, stable within a run.
@@ -20,7 +15,7 @@ user-visible randomness, stable within a run.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,47 +24,3 @@ def with_salt(df: DataFrame, buckets: int, salt_col: str = "_salt") -> DataFrame
     return df.withColumn(
         salt_col, F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(buckets))
     )
-
-
-def salted_count(
-    df: DataFrame, keys: list[str], buckets: int = 16, out_col: str = "cnt"
-) -> DataFrame:
-    """Two-phase skew-safe count: groupBy(key, salt).count() then
-    groupBy(key).sum(). Identical result to a direct count; the hot key's
-    work spreads over ``buckets`` reducers in phase 1."""
-    salted = with_salt(df, buckets)
-    phase1 = salted.groupBy(*keys, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
-    return phase1.groupBy(*keys).agg(F.sum("_partial").alias(out_col))
-
-
-def salted_sum(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    buckets: int = 16,
-    out_col: str = "total",
-) -> DataFrame:
-    """Two-phase skew-safe sum over ``value_col``."""
-    salted = with_salt(df, buckets)
-    phase1 = salted.groupBy(*keys, "_salt").agg(F.sum(value_col).alias("_partial"))
-    return phase1.groupBy(*keys).agg(F.sum("_partial").alias(out_col))
-
-
-def salted_join_small(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: replicate ``small`` once per salt bucket and salt
-    ``big`` rows uniformly, so a hot join key fans over ``buckets`` tasks.
-
-    The small side grows x buckets — use only when |small| * buckets is
-    shuffle-affordable (the usual case: a dimension with a few hot keys).
-    """
-    salts = F.array(*[F.lit(i) for i in range(buckets)])
-    small_rep = small.withColumn("_salt", F.explode(salts))
-    big_salted = with_salt(big, buckets)
-    joined = big_salted.join(small_rep, on=[on, "_salt"], how=how)
-    return joined.drop("_salt")

@@ -78,63 +78,6 @@ def asof_join(
     return carried.filter(F.col("_is_left") == 1).drop("_is_left")
 
 
-def asof_join_grouped(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    suffix: str = "_asof",
-) -> DataFrame:
-    """Same semantics as :func:`asof_join`, implemented as a grouped-map
-    ``applyInPandas`` running ``pd.merge_asof`` per key — the pandas-UDF
-    alternative when per-group logic outgrows window expressions.
-
-    Trade-off vs the window version: cogroup shuffles BOTH inputs by key and
-    crosses into Python per group (Arrow-batched), but gives the full pandas
-    toolbox inside. Prefer the window version for plain as-of; use this shape
-    when the per-group computation is genuinely pandas-shaped.
-    """
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    out_fields = list(left.schema.fields) + [
-        StructField(f"{c}{suffix}", right.schema[c].dataType) for c in value_cols
-    ]
-    out_schema = StructType(out_fields)
-    lcols = left.columns
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            out = l_sorted.copy()
-            for c in value_cols:
-                out[f"{c}{suffix}"] = None
-            return out[[*lcols, *[f"{c}{suffix}" for c in value_cols]]]
-        r_sorted = r_pdf.sort_values(right_ts, kind="mergesort")[
-            [right_ts, *value_cols]
-        ].rename(
-            columns={right_ts: "_rts", **{c: f"{c}{suffix}" for c in value_cols}}
-        )
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_ts,
-            right_on="_rts",
-            direction="backward",
-        )
-        return out[[*lcols, *[f"{c}{suffix}" for c in value_cols]]]
-
-    return (
-        left.groupBy(key)
-        .cogroup(right.groupBy(key))
-        .applyInPandas(
-            lambda l, r: merge(l, r), schema=out_schema
-        )
-    )
-
-
 def range_join_bucketed(
     df: DataFrame,
     key: str,

@@ -160,26 +160,6 @@ def chunk_documents(
     )
 
 
-def token_count_pandas_udf():
-    """Scalar pandas UDF token counter — the vectorized-UDF lane of the UDF
-    policy, equivalent to the JVM expression :func:`token_count` (tested).
-    Built lazily (returns the udf) so importing this module needs no session.
-    The closure is self-contained for worker-side pickling."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _count(texts):
-        # keep in sync with TOKEN_PATTERN (inlined: workers must not need
-        # this module importable)
-        pattern = r"[a-zA-Z0-9_]+|[^a-zA-Z0-9_\s]"
-        return texts.fillna("").str.count(pattern)
-
-    # real annotation objects: `from __future__ import annotations` would
-    # stringify inline hints and break pandas_udf's type inference
-    _count.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf(_count, "long")
-
-
 def bigram_quality_scores(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -88,16 +88,3 @@ def load_credentials(
         password=password,
         filepath=rows[f"{name_prefix} filepath"],
     )
-
-
-def register_metadata_views(
-    spark: SparkSession, repo: ConfigRepository, state=None
-) -> None:
-    """Expose the metadata model to SQL exactly as the reference addresses it
-    (``configurations.configvalues`` / ``configurations.TableLoadDetails`` —
-    dots aren't valid in temp-view names, so underscores stand in)."""
-    repo.to_spark(spark).createOrReplaceTempView("configurations_configvalues")
-    if state is not None:
-        state.to_spark(spark).createOrReplaceTempView(
-            "configurations_TableLoadDetails"
-        )

@@ -32,8 +32,9 @@ Efficiency redesign vs the reference (SURVEY.md §4):
     ``partitionBy`` on derived date columns — at 100 TB this is the only
     sane strategy (the per-chunk loop is kept as ``'chunked'`` for strict
     write-set parity testing; the written *content* is identical)
-  - watermark max is computed from the cached staged data, not a re-read of
-    the written files, unless ``reread_written=True`` (parity mode)
+  - watermark max is computed from the cached staged data in the same
+    aggregate as the row count, not from a re-read of the written files
+    (the written rows are the staged rows)
 """
 
 from __future__ import annotations
@@ -60,7 +61,6 @@ from bigdataingestion_spark.sources.base import Source
 from bigdataingestion_spark.sources.querygen import TableAddress, resolve_table
 
 WATERMARK_LAG_HOURS = 80  # reference ING:350
-_UNSET = object()  # sentinel: None is a legitimate precomputed load date
 DB_SETTINGS_GROUP = "dcx_postgresql_db_settings"
 TABLE_SETTINGS_GROUP = "dcx_postgresql_table_settings"
 WATERMARK_SETTINGS_GROUP = "dcx_postgresql_watermark_settings"
@@ -88,7 +88,6 @@ class Orchestrator:
     alerts: AlertSink = None  # type: ignore[assignment]
     single_batch_limit: int = 1_000_000  # reference default (ING:54)
     write_strategy: str = "chunked"  # 'chunked' (parity) | 'partitioned' (scale)
-    reread_written: bool = False  # parity: recompute watermark from written files
     state_database: str = "sharestory"  # the reference hardcodes this (ING:381)
     # optional per-table data-quality gates (lowercased table name ->
     # expectations), evaluated on the staged increment before any write;
@@ -119,37 +118,13 @@ class Orchestrator:
         self,
         system_type: str,
         addr: TableAddress,
-        staged: DataFrame,
-        watermark_cols: list[str],
-        task: str,
-        path: str,
+        load_date,
         previous: str | None,
         insert_allowed: bool,
-        precomputed_load_date=_UNSET,
     ) -> str | None:
-        """New watermark = MAX(COALESCE(wm)) − 80h (ING:345-361) then MERGE.
-
-        ``precomputed_load_date``: the caller already computed the lagged max
-        in its fused volume-gate aggregate (one job instead of two); honored
-        only when not re-reading written files (``reread_written`` recomputes
-        from the written path — parity mode keeps its own read)."""
-        if precomputed_load_date is not _UNSET and not self.reread_written:
-            load_date = precomputed_load_date
-        else:
-            src = (
-                self.writer.read_back(self.spark, task, path).drop(
-                    "_ingest_year", "_ingest_month"  # partitioned-write layout cols
-                )
-                if self.reread_written
-                else staged
-            )
-            row = src.agg(
-                (
-                    F.max(watermark_expr(watermark_cols))
-                    - F.expr(f"INTERVAL {WATERMARK_LAG_HOURS} HOURS")
-                ).alias("loadDate")
-            ).first()
-            load_date = row["loadDate"] if row else None
+        """MERGE the new watermark state (ING:345-361). ``load_date`` is
+        MAX(COALESCE(wm)) − 80h of the staged increment, which the caller
+        computes in its fused volume-gate aggregate."""
         if load_date is None:
             load_date = previous  # reference fallback (ING:357-360)
         if load_date is None and not insert_allowed:
@@ -252,11 +227,6 @@ class Orchestrator:
                 )
             stats = staged.agg(*aggs).first()
             count = stats["_n"]
-            pre_load_date = (
-                stats["_load_date"]
-                if watermark_cols and not self.reread_written
-                else _UNSET
-            )
             self.audit.add(f"Data Load Count From Source - {count}", count)
             if count == 0:
                 self.audit.add(f"No Records to load for {addr.table}")
@@ -280,9 +250,8 @@ class Orchestrator:
                 new_wm = None
                 if watermark_cols:
                     new_wm = self._update_state(
-                        system_type, addr, staged, watermark_cols, task, path,
+                        system_type, addr, stats["_load_date"],
                         previous=last, insert_allowed=False,
-                        precomputed_load_date=pre_load_date,
                     )
                 return IngestionResult(
                     addr.table, path, count, "small-overwrite", new_watermark=new_wm
@@ -297,9 +266,8 @@ class Orchestrator:
                     ),
                 )
                 new_wm = self._update_state(
-                    system_type, addr, staged, watermark_cols, task, path,
+                    system_type, addr, stats["_load_date"],
                     previous=last, insert_allowed=True,
-                    precomputed_load_date=pre_load_date,
                 )
                 return IngestionResult(
                     addr.table, path, count, "chunked", chunks=n, new_watermark=new_wm

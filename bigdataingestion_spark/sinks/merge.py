@@ -1,20 +1,19 @@
-"""Data-level MERGE (upsert) for parquet lake tables.
+"""Data-level latest-wins MERGE (upsert) for parquet lake tables.
 
 The reference's only MERGE is its state-table upsert
 (``PostgresToDataLake_Ingestion_Notebook.py:373-415``, rebuilt in
 ``config.state``); its *data* writes are append/overwrite with documented
-duplicate risk. This operator extends the engine with delta-style
-``MERGE INTO`` semantics over plain parquet:
+duplicate risk. ``merge_upsert_ordered`` extends the engine with a
+delta-style deduplicated ``MERGE INTO`` over plain parquet, the sink of
+``streaming.ingest.stream_cdc_upsert``:
 
-  upsert(target, source, keys) == WHEN MATCHED UPDATE SET * /
-                                  WHEN NOT MATCHED INSERT *
+  per key, keep the row with the greatest order columns across
+  target UNION source
 
-Implementation: target LEFT ANTI source on the keys (rows that survive), plus
-all source rows, written to a staging directory and atomically swapped into
-place. The anti-join shuffles on the key columns — at 100 TB, partition the
-table and pass ``partition_filter`` so only affected partitions are rewritten
-(classic copy-on-write merge; delta/iceberg do file-level pruning of the
-same idea).
+One key-partitioned window over target ∪ source, written to a staging
+directory and atomically swapped into place (classic copy-on-write merge).
+Transactional key-matching upserts with file-level pruning live in
+``TxLogTable.merge_upsert``.
 """
 
 from __future__ import annotations
@@ -23,55 +22,9 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    keys: list[str],
-    partition_filter: Column | None = None,
-) -> int:
-    """Upsert ``source`` into the parquet table at ``target_path`` by key.
-
-    Returns the row count after the merge. With ``partition_filter``, only
-    rows matching the filter participate in the rewrite; rows outside it are
-    retained untouched (they are still rewritten physically here — true
-    file-level pruning needs a table format; documented trade-off).
-    """
-    if not os.path.exists(target_path):
-        source.write.parquet(target_path)
-        return source.count()
-
-    target = spark.read.parquet(target_path)
-    if partition_filter is not None:
-        # rows outside the filter are retained — but still anti-joined on
-        # the source keys: a key whose partition value CHANGED in the source
-        # would otherwise survive in its old partition and duplicate
-        keep_outside = target.filter(~partition_filter).join(
-            source.select(keys), on=keys, how="left_anti"
-        )
-        target_in = target.filter(partition_filter)
-    else:
-        keep_outside = None
-        target_in = target
-
-    survivors = target_in.join(source.select(keys), on=keys, how="left_anti")
-    merged = survivors.unionByName(source)
-    if keep_outside is not None:
-        merged = keep_outside.unionByName(merged)
-
-    staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.parquet(staging)
-    n = spark.read.parquet(staging).count()
-    backup = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
-    return n
 
 
 def merge_upsert_ordered(
@@ -85,13 +38,13 @@ def merge_upsert_ordered(
     ``order_cols`` across target UNION source (delta's "deduplicated
     upsert" / WHEN MATCHED AND s.ord >= t.ord THEN UPDATE).
 
-    Unlike ``merge_upsert`` (source unconditionally wins), this is correct
-    when deliveries are out of order — a micro-batch carrying an OLDER
-    version of a key cannot regress the stored row, so the final state is
+    The source row does not win unconditionally, so this is correct when
+    deliveries are out of order — a micro-batch carrying an OLDER version
+    of a key cannot regress the stored row, and the final state is
     independent of arrival order. Idempotent by construction: re-applying
     any already-merged batch is a no-op. One key-partitioned window over
-    target ∪ batch — at 100 TB, pair with partitioned tables and a
-    partition filter exactly as in ``merge_upsert``.
+    target ∪ batch — at 100 TB, pair with partitioned tables so only the
+    affected partitions are rewritten.
     """
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).desc() for c in order_cols]

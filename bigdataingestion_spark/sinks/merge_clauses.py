@@ -14,7 +14,8 @@ clause per row category; unmatched rows carry; a source row matching no
 insert clause is ignored; NULL conditions do not fire a clause). The
 reference repo reaches the same shapes through Spark-SQL ``MERGE INTO``
 on its state tables (ING:366-415); this generalizes the two fixed merge
-shapes in ``sinks/merge.py`` to arbitrary clause lists.
+shapes of ``TxLogTable.merge_upsert`` (source-wins, latest-wins) to
+arbitrary clause lists.
 
 Expression scoping rules (documented on ``TxLogTable.merge``):
 

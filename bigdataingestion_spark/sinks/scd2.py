@@ -1,10 +1,10 @@
 """SCD2 (slowly-changing-dimension type 2) history tracking over parquet.
 
 CDC-style ingestion keeps full history: instead of updating a changed row in
-place (SCD1 = ``sinks.merge.merge_upsert``), the current version is closed
+place (SCD1 = ``TxLogTable.merge_upsert``), the current version is closed
 out (``valid_to`` set) and a new version row opened. Delta implements this
 with MERGE; without table-format jars we emulate with joins + an atomic
-staging swap (same pattern as merge_upsert):
+staging swap (same pattern as ``sinks.merge.merge_upsert_ordered``):
 
   * unchanged current rows            -> kept as-is
   * current rows whose source differs -> closed (valid_to = change ts)

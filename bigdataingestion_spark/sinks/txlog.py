@@ -3673,12 +3673,12 @@ class TxLogTable:
     ) -> int:
         """Copy-on-write MERGE INTO with FILE-LEVEL PRUNING: source-wins
         upsert by ``keys``, or latest-wins by ``order_cols`` when
-        deliveries may be out of order (the two MERGE shapes in
-        ``sinks/merge.py``, committed atomically). Only keys present in
-        the source are affected — like Delta's MERGE, this never dedups
-        pre-existing duplicate keys the source doesn't mention, in ANY
-        mode (a whole-table dedup side effect would also be
-        layout-dependent under pruning: duplicates split across
+        deliveries may be out of order (the latter is
+        ``sinks/merge.py::merge_upsert_ordered``, committed atomically).
+        Only keys present in the source are affected — like Delta's
+        MERGE, this never dedups pre-existing duplicate keys the source
+        doesn't mention, in ANY mode (a whole-table dedup side effect
+        would also be layout-dependent under pruning: duplicates split across
         touched/untouched files would dedup partially). Latest-wins
         matches NULL keys to NULL keys (its window groups them);
         source-wins never matches a NULL key and inserts every source
@@ -3874,25 +3874,6 @@ class TxLogTable:
             if ours:
                 cached.unpersist()
 
-        def read_check(added: list[str], cur: Snapshot) -> list[str]:
-            # the merge's read set is "every row whose key the source
-            # carries": a winner-added file conflicts unless its log-held
-            # key stats prove it disjoint from the source's key bounds
-            p2l = self._p2l_of(cur.schema_json)
-            return [
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        null_safe,
-                    )
-                )
-            ]
-
         v = self._commit_reconciled(
             files,
             touched,
@@ -3900,7 +3881,7 @@ class TxLogTable:
             "merge",
             txn_id,
             snap,
-            read_check=read_check,
+            read_check=self._key_read_check(src_bounds, keys, null_safe),
             precomputed_stats=fstats,
             cdf=cdf_map,
             metrics={
@@ -4368,23 +4349,12 @@ class TxLogTable:
             if cond is not None
         ]
 
+        key_check = self._key_read_check(src_bounds, keys, False)
+
         def read_check(added: list[str], cur: Snapshot) -> list[str]:
             if uncond_bysrc:
                 return list(added)  # read set is the whole table
-            p2l = self._p2l_of(cur.schema_json)
-            bad = {
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        False,
-                    )
-                )
-            }
+            bad = set(key_check(added, cur))
             for chk in pred_checks:
                 rest = [f for f in added if f not in bad]
                 bad |= set(chk(rest, cur))
@@ -4502,22 +4472,6 @@ class TxLogTable:
             if ours:
                 source.unpersist()
 
-        def read_check(added: list[str], cur: Snapshot) -> list[str]:
-            p2l = self._p2l_of(cur.schema_json)
-            return [
-                f
-                for f in added
-                if not (
-                    f in cur.file_stats
-                    and _keys_disjoint(
-                        src_bounds,
-                        self._stats_logical(cur.file_stats[f], p2l),
-                        keys,
-                        False,
-                    )
-                )
-            ]
-
         return self._commit_reconciled(
             files,
             touched,
@@ -4525,7 +4479,7 @@ class TxLogTable:
             "delete",
             txn_id,
             snap,
-            read_check=read_check,
+            read_check=self._key_read_check(src_bounds, keys, False),
             precomputed_stats=fstats,
             cdf=cdf_map,
             metrics={
@@ -5517,6 +5471,30 @@ class TxLogTable:
         )
         self._maybe_auto_compact(spark)
         return v
+
+    def _key_read_check(self, src_bounds: dict, keys: list[str], null_safe: bool):
+        """Read-set conflict probe for key-matching DML: the op read
+        "every row whose key the source carries", so a winner-added file
+        conflicts unless its log-held key stats prove it disjoint from
+        the source's key bounds (``_keys_disjoint``)."""
+
+        def read_check(added: list[str], cur: Snapshot) -> list[str]:
+            p2l = self._p2l_of(cur.schema_json)
+            return [
+                f
+                for f in added
+                if not (
+                    f in cur.file_stats
+                    and _keys_disjoint(
+                        src_bounds,
+                        self._stats_logical(cur.file_stats[f], p2l),
+                        keys,
+                        null_safe,
+                    )
+                )
+            ]
+
+        return read_check
 
     def _predicate_read_check(self, predicate: str, session_tz: str | None = None):
         """Read-set conflict probe for predicate DML: of the files a

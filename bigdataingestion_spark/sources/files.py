@@ -14,6 +14,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdataingestion_spark.functions.io import (
+    convert_ns_long_columns,
+    ns_timestamp_columns,
+)
 from bigdataingestion_spark.sources.querygen import TableAddress
 
 
@@ -36,7 +40,9 @@ class FileSource:
                 return c
         return candidates[0]
 
-    def read_table(self, database: str, addr: TableAddress) -> DataFrame:
+    def _load(self, database: str, addr: TableAddress) -> tuple[DataFrame, list[str]]:
+        """The table as Spark loads it, and its TIMESTAMP(NANOS) columns,
+        which a parquet load leaves as raw-nanos longs."""
         path = self._path(database, addr.table)
         reader = self.spark.read.format(self.fmt)
         defaults = (
@@ -45,14 +51,12 @@ class FileSource:
         for k, v in {**defaults, **(self.options or {})}.items():
             reader = reader.option(k, v)
         df = reader.load(path)
-        if self.fmt == "parquet":
-            from bigdataingestion_spark.functions.io import (
-                convert_ns_long_columns,
-                ns_timestamp_columns,
-            )
+        if self.fmt != "parquet":
+            return df, []
+        return df, ns_timestamp_columns(path, df.dtypes)
 
-            df = convert_ns_long_columns(df, ns_timestamp_columns(path, df.dtypes))
-        return df
+    def read_table(self, database: str, addr: TableAddress) -> DataFrame:
+        return convert_ns_long_columns(*self._load(database, addr))
 
     def probe_table(self, database: str, addr: TableAddress) -> DataFrame:
         return self.read_table(database, addr)
@@ -64,39 +68,21 @@ class FileSource:
         watermark_cols: list[str],
         last_load_date: str,
     ) -> DataFrame:
-        df = self.read_table(database, addr)
+        df, ns_cols = self._load(database, addr)
+        if watermark_cols and set(ns_cols).issuperset(watermark_cols):
+            # push a raw-nanos pre-filter for ns-timestamp columns: a
+            # predicate on timestamp_micros(raw div 1000) cannot reach the
+            # parquet scan, but raw >= watermark_ns can (row-group stats
+            # prune). Exact integer bound: micros*1000 (double math would
+            # round at epoch-nanos scale and could exclude boundary rows)
+            ts_ns = (
+                F.unix_micros(F.lit(str(last_load_date)).cast("timestamp"))
+                * F.lit(1000)
+            )
+            df = df.filter(F.coalesce(*[F.col(c) for c in watermark_cols]) >= ts_ns)
+        df = convert_ns_long_columns(df, ns_cols)
         if not watermark_cols:
             return df
-        # push a raw-nanos pre-filter for converted ns-timestamp columns:
-        # a predicate on timestamp_micros(raw div 1000) cannot reach the
-        # parquet scan, but raw >= watermark_ns can (row-group stats prune)
-        if self.fmt == "parquet":
-            from bigdataingestion_spark.functions.io import ns_timestamp_columns
-
-            path = self._path(database, addr.table)
-            raw = self.spark.read.format(self.fmt).load(path)
-            ns_cols = set(ns_timestamp_columns(path, raw.dtypes))
-            if ns_cols.issuperset(watermark_cols):
-                from bigdataingestion_spark.functions.io import (
-                    convert_ns_long_columns,
-                )
-
-                # exact integer bound: micros*1000 (double math would round
-                # at epoch-nanos scale and could exclude boundary rows)
-                ts_ns = (
-                    F.unix_micros(F.lit(str(last_load_date)).cast("timestamp"))
-                    * F.lit(1000)
-                )
-                raw_wm = F.coalesce(*[F.col(c) for c in watermark_cols])
-                pre = raw.filter(raw_wm >= ts_ns)
-                pre = convert_ns_long_columns(
-                    pre, sorted(ns_cols & set(pre.columns))
-                )
-                # exact boundary re-check in timestamp space (ns pre-filter
-                # is conservative only through the double cast of the bound)
-                wm = F.coalesce(*[F.col(c) for c in watermark_cols])
-                return pre.filter(
-                    wm >= F.lit(str(last_load_date)).cast("timestamp")
-                )
+        # the exact check, in timestamp space (the ns pre-filter only prunes)
         wm = F.coalesce(*[F.col(c) for c in watermark_cols])
         return df.filter(wm >= F.lit(str(last_load_date)).cast("timestamp"))

@@ -203,16 +203,6 @@ def stream_windowed_counts(
         )
 
 
-def incremental_batch_stream(
-    spark: SparkSession,
-    df: DataFrame,
-    ts_col: str,
-) -> DataFrame:
-    """Helper exposing the 80h watermark on an arbitrary streaming frame —
-    used by custom stateful pipelines built on top of this module."""
-    return df.withWatermark(ts_col, WATERMARK_LAG)
-
-
 def stream_dedup_to_lake(
     spark: SparkSession,
     source_dir: str,

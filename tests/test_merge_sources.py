@@ -1,46 +1,15 @@
-"""Data-level merge upsert + non-parquet file sources."""
+"""File sources: non-parquet formats and watermark increments."""
 
 from __future__ import annotations
 
-import os
+from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 
-from bigdataingestion_spark.sinks.merge import merge_upsert
 from bigdataingestion_spark.sources.files import FileSource
 from bigdataingestion_spark.sources.querygen import resolve_table
-
-
-def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["id", "name", "v"]
-    )
-    assert merge_upsert(spark, path, base, keys=["id"]) == 3
-    src = spark.createDataFrame([(2, "B", 99), (4, "d", 40)], ["id", "name", "v"])
-    assert merge_upsert(spark, path, src, keys=["id"]) == 4
-    out = {r.id: (r.name, r.v) for r in spark.read.parquet(path).collect()}
-    assert out == {1: ("a", 10), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
-
-
-def test_merge_upsert_idempotent(spark, tmp_path):
-    path = str(tmp_path / "tbl2")
-    base = spark.createDataFrame([(1, 10), (2, 20)], ["id", "v"])
-    merge_upsert(spark, path, base, keys=["id"])
-    merge_upsert(spark, path, base, keys=["id"])  # same source again
-    assert spark.read.parquet(path).count() == 2
-
-
-def test_merge_upsert_partition_filter_preserves_outside(spark, tmp_path):
-    path = str(tmp_path / "tbl3")
-    base = spark.createDataFrame(
-        [(1, 2023, 10), (2, 2024, 20), (3, 2024, 30)], ["id", "year", "v"]
-    )
-    merge_upsert(spark, path, base, keys=["id"])
-    src = spark.createDataFrame([(2, 2024, 99)], ["id", "year", "v"])
-    merge_upsert(spark, path, src, keys=["id"], partition_filter=F.col("year") == 2024)
-    out = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert out == {1: 10, 2: 99, 3: 30}
 
 
 def test_csv_and_json_file_sources(spark, tmp_path):
@@ -75,3 +44,44 @@ def test_orc_file_source_roundtrip(spark, tmp_path):
     assert got.count() == 3
     assert set(got.columns) == {"id", "name", "v"}
     assert {r["name"] for r in got.collect()} == {"x", "y", "z"}
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_read_increment_loads_table_once(spark, tmp_path, unit):
+    """Building an increment frame loads the table once: one Spark job (its
+    schema inference) for a µs and for an ns watermark table, and rows
+    exactly at the watermark survive the filter."""
+    bound = datetime(2024, 1, 2)
+    us = timedelta(microseconds=1)
+    rows = [  # (id, updated, created); watermark = COALESCE(updated, created)
+        (1, None, bound - us),
+        (2, bound, bound - timedelta(days=1)),
+        (3, None, bound),
+        (4, bound + timedelta(hours=1), None),
+        (5, bound - us, bound + timedelta(days=1)),
+    ]
+    tbl = pa.table({
+        "id": [r[0] for r in rows],
+        "updated": pa.array([r[1] for r in rows], pa.timestamp(unit)),
+        "created": pa.array([r[2] for r in rows], pa.timestamp(unit)),
+    })
+    path = tmp_path / "db" / "t.parquet"
+    path.mkdir(parents=True)
+    pq.write_table(tbl.slice(0, 2), str(path / "part-0.parquet"))
+    pq.write_table(tbl.slice(2), str(path / "part-1.parquet"))
+
+    src = FileSource(spark, str(tmp_path))
+    sc = spark.sparkContext
+    group = f"read-increment-{unit}"
+    sc.setJobGroup(group, group)
+    try:
+        df = src.read_increment(
+            "db", resolve_table("t", task="x"), ["updated", "created"], str(bound)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert dict(df.dtypes)["updated"].startswith("timestamp")
+    assert sorted(r.id for r in df.collect()) == [2, 3, 4]

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdataingestion_spark.config.crypto import decrypt_value, encrypt_value
-from bigdataingestion_spark.sinks.merge import merge_upsert
 from bigdataingestion_spark.sinks.scd2 import apply_scd2, current_view
 from bigdataingestion_spark.sources.jdbc import JdbcSource
 from bigdataingestion_spark.sources.querygen import resolve_table
@@ -32,23 +31,6 @@ def test_scd2_null_shift_detected(spark, tmp_path):
     assert hist.count() == 2  # closed old version + open new version
     cur = current_view(spark, path).collect()
     assert len(cur) == 1 and cur[0].a is None and cur[0].b == "x"
-
-
-def test_merge_upsert_key_moving_partitions_no_duplicate(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, 2023, 10), (2, 2024, 20)], ["id", "year", "v"]
-    )
-    merge_upsert(spark, path, base, keys=["id"])
-    # key 1 moves from year 2023 (outside the filter) to 2024
-    src = spark.createDataFrame([(1, 2024, 99)], ["id", "year", "v"])
-    merge_upsert(spark, path, src, keys=["id"], partition_filter=F.col("year") == 2024)
-    out = spark.read.parquet(path)
-    assert out.count() == 2
-    assert {r.id: (r.year, r.v) for r in out.collect()} == {
-        1: (2024, 99),
-        2: (2024, 20),
-    }
 
 
 def test_jdbc_partitioned_read_empty_increment_no_crash(spark, tmp_path):

@@ -1,50 +1,14 @@
-"""Skew salting, bucketed co-located joins, idempotent partitioned writes."""
+"""Bucketed co-located joins, idempotent partitioned writes."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from bigdataingestion_spark.operators import skew
 from bigdataingestion_spark.sinks.bucketed import (
     cobucketed_join,
     is_exchange_free,
     write_bucketed,
 )
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # key 'hot' carries 90% of rows
-    hot = spark.range(9000).select(
-        F.lit("hot").alias("k"), (F.col("id") % 7).alias("v")
-    )
-    cold = spark.range(1000).select(
-        F.concat(F.lit("c"), (F.col("id") % 50).cast("string")).alias("k"),
-        (F.col("id") % 7).alias("v"),
-    )
-    return hot.union(cold)
-
-
-def test_salted_count_matches_direct(spark, skewed):
-    direct = {r.k: r.cnt for r in skewed.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    salted = {r.k: r.cnt for r in skew.salted_count(skewed, ["k"]).collect()}
-    assert salted == direct
-
-
-def test_salted_sum_matches_direct(spark, skewed):
-    direct = {r.k: r.total for r in skewed.groupBy("k").agg(F.sum("v").alias("total")).collect()}
-    salted = {r.k: r.total for r in skew.salted_sum(skewed, ["k"], "v").collect()}
-    assert salted == direct
-
-
-def test_salted_join_matches_direct(spark, skewed):
-    dim = spark.createDataFrame(
-        [("hot", "HOT"), ("c1", "C1"), ("c2", "C2")], ["k", "label"]
-    )
-    direct = skewed.join(dim, "k").groupBy("k").count()
-    salted = skew.salted_join_small(skewed, dim, on="k", buckets=8).groupBy("k").count()
-    assert {tuple(r) for r in direct.collect()} == {tuple(r) for r in salted.collect()}
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):

@@ -44,29 +44,36 @@ def test_asof_join_backward_with_ties(spark):
     assert out[4] == 300  # tie (==) matches
 
 
-def test_asof_join_grouped_matches_window_impl(spark, sf_smoke_dir):
-    """The applyInPandas (pd.merge_asof) implementation must agree with the
-    window implementation on real data."""
-    from pyspark.sql import functions as F
+def test_asof_join_matches_duckdb_asof_oracle(spark, sf_smoke_dir):
+    """The window as-of join agrees with DuckDB's native ASOF LEFT JOIN
+    (the ``asof_last_purchase`` oracle) on real data."""
+    import os
 
+    import duckdb
+
+    from bigdataingestion_spark.catalog import oracle_sql
     from bigdataingestion_spark.functions.io import load_table
 
-    ev = load_table(spark, sf_smoke_dir, "events").select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_smoke_dir, "events")
     purchases = (
-        load_table(spark, sf_smoke_dir, "events")
-        .filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id", "ts")
         .agg(F.max("event_id").alias("pe_id"))
     )
-    a = temporal.asof_join(
-        ev, purchases, key="user_id", left_ts="ts", right_ts="ts", value_cols=["pe_id"]
+    got = temporal.asof_join(
+        ev.select("event_id", "user_id", "ts"), purchases,
+        key="user_id", left_ts="ts", right_ts="ts", value_cols=["pe_id"],
     )
-    b = temporal.asof_join_grouped(
-        ev, purchases, key="user_id", left_ts="ts", right_ts="ts", value_cols=["pe_id"]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"'{os.path.join(sf_smoke_dir, 'events.parquet')}'"
     )
-    ra = {(r.event_id, r.pe_id_asof) for r in a.collect()}
-    rb = {(r.event_id, r.pe_id_asof) for r in b.collect()}
-    assert ra == rb
+    want = con.execute(
+        f"SELECT event_id, pe_id_asof FROM ({oracle_sql()['asof_last_purchase']})"
+    ).fetchall()
+    assert any(pe is not None for _, pe in want)
+    assert {(r.event_id, r.pe_id_asof) for r in got.collect()} == set(want)
 
 
 def test_range_join_bucketed_exact_window(spark):
