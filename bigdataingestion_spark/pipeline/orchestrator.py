@@ -35,15 +35,26 @@ Efficiency redesign vs the reference (SURVEY.md §4):
   - watermark max is computed from the cached staged data in the same
     aggregate as the row count, not from a re-read of the written files
     (the written rows are the staged rows)
+  - a run's tables load concurrently on a thread pool of
+    ``min(#groups, defaultParallelism)`` workers; each load is a handful
+    of tiny Spark jobs, so the serial loop mostly waited on scheduler and
+    driver round trips. Entries that share a lake directory or a state
+    row form one group, run in config order on one worker, so a later
+    entry still sees the earlier one's state and writes. Results come
+    back in config order; each table's audit records and alerts are
+    buffered and replayed in config order after the pool drains, so the
+    audit file holds the same records in the same order as a serial run
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from bigdataingestion_spark.config.repository import ConfigRepository
 from bigdataingestion_spark.config.state import TableLoadDetails
@@ -75,6 +86,28 @@ class IngestionResult:
     chunks: int = 0
     new_watermark: str | None = None
     error: str | None = None
+
+
+@dataclass
+class _TableLog:
+    """One table load's audit records and alerts, in the order the load
+    made them, kept until ``Orchestrator.run`` replays them in config
+    order. Stands in for the orchestrator's alert sink during the load."""
+
+    audit: AuditLog
+    # (number of audit records made before the alert, subject, body)
+    alerts: list[tuple[int, str, str]] = field(default_factory=list)
+
+    def alert(self, subject: str, body: str) -> None:
+        self.alerts.append((len(self.audit.records), subject, body))
+
+    def replay(self, audit: AuditLog, sink: AlertSink) -> None:
+        done = 0
+        for pos, subject, body in self.alerts:
+            audit.records.extend(self.audit.records[done:pos])
+            done = pos
+            sink.alert(subject, body)
+        audit.records.extend(self.audit.records[done:])
 
 
 @dataclass
@@ -284,9 +317,54 @@ class Orchestrator:
 
     # -- whole-run loop ---------------------------------------------------------
 
+    def _load_group(
+        self, entries: list[tuple[str, str, str]], run_date: str | None
+    ) -> list[tuple[IngestionResult, _TableLog]]:
+        """``load_table`` for each entry in order, with per-table error
+        isolation (ING:472-477). Each load's audit records and alerts go to
+        a private log, not to the run's."""
+        out = []
+        for db_name, task, tbl in entries:
+            log = _TableLog(AuditLog(notebook=self.audit.notebook))
+            try:
+                orch = replace(self, audit=log.audit, alerts=log)
+                result = orch.load_table(db_name, task, tbl, run_date)
+            except Exception as e:  # noqa: BLE001 — per-table isolation (ING:472-477)
+                msg = str(e)
+                log.audit.add(
+                    f"Task Failed while executing for Table: {tbl}, "
+                    f"with ERROR: {msg[:500]}"
+                )
+                log.alert("table-failure", failure_alert_body(tbl, msg))
+                result = IngestionResult(tbl, None, 0, "failed", error=msg[:500])
+            out.append((result, log))
+        return out
+
+    def _groups(self, entries: list[tuple[str, str, str]]) -> list[list[int]]:
+        """Entry indices grouped so that entries sharing a lake directory or
+        a state row are in one group; groups and their members in config
+        order."""
+        groups: list[tuple[set, list[int]]] = []  # (targets, members)
+        for i, (_, task, tbl) in enumerate(entries):
+            addr = resolve_table(tbl, task)
+            targets = {
+                ("lake", addr.lake_dir),
+                ("state", self.system_type_for(task, tbl), addr.state_key),
+            }
+            members = [i]
+            # an entry can join several earlier groups: merge them all
+            for g in [g for g in groups if g[0] & targets]:
+                groups.remove(g)
+                targets |= g[0]
+                members = g[1] + members
+            groups.append((targets, sorted(members)))
+        return sorted((m for _, m in groups), key=lambda m: m[0])
+
     def run(self, run_date: str | None = None) -> list[IngestionResult]:
         """The reference main loop (ING:442-485): db-configs x table-configs
-        matched on task prefix, per-table error isolation, one audit flush."""
+        matched on task prefix, per-table error isolation, one audit flush.
+        Tables load concurrently (module docstring); results, audit records
+        and alerts keep config order."""
         dbs = self.config.get_group(DB_SETTINGS_GROUP)
         if not dbs:
             raise RuntimeError("No databases detail available in the config table")
@@ -294,30 +372,42 @@ class Orchestrator:
         if not tbls:
             raise RuntimeError("No tables detail available in the config table")
 
-        results: list[IngestionResult] = []
+        entries = [
+            (dbs_name, tbl_config.split("_")[0], tbl)
+            for dbs_config, dbs_name in dbs.items()
+            for tbl_config, tbl_csv in tbls.items()
+            if dbs_config.split("_")[0] == tbl_config.split("_")[0]
+            for tbl in tbl_csv.split(",")
+        ]
+        groups = self._groups(entries)
+        done: list[tuple[IngestionResult, _TableLog] | None] = [None] * len(entries)
         try:
-            for dbs_config, dbs_name in dbs.items():
-                for tbl_config, tbl_csv in tbls.items():
-                    if dbs_config.split("_")[0] != tbl_config.split("_")[0]:
-                        continue
-                    task = tbl_config.split("_")[0]
-                    for tbl in tbl_csv.split(","):
-                        try:
-                            results.append(
-                                self.load_table(dbs_name, task, tbl, run_date)
-                            )
-                        except Exception as e:  # noqa: BLE001 — per-table isolation (ING:472-477)
-                            msg = str(e)
-                            self.audit.add(
-                                f"Task Failed while executing for Table: {tbl}, "
-                                f"with ERROR: {msg[:500]}"
-                            )
-                            self.alerts.alert(
-                                "table-failure", failure_alert_body(tbl, msg)
-                            )
-                            results.append(
-                                IngestionResult(tbl, None, 0, "failed", error=msg[:500])
-                            )
+            if groups:
+                workers = min(len(groups), self.spark.sparkContext.defaultParallelism)
+                with ThreadPoolExecutor(max_workers=workers) as pool:
+                    futures = [
+                        pool.submit(
+                            self._inheriting(self._load_group),
+                            [entries[i] for i in g],
+                            run_date,
+                        )
+                        for g in groups
+                    ]
+                    for g, fut in zip(groups, futures):
+                        for i, out in zip(g, fut.result()):
+                            done[i] = out
         finally:
+            for out in done:
+                if out is not None:
+                    out[1].replay(self.audit, self.alerts)
             self.audit.flush()
-        return results
+        return [out[0] for out in done]
+
+    def _inheriting(self, fn):
+        """``fn`` set up to run with the calling thread's job group, job tags
+        and scheduler pool. The copy is taken now, so wrap once per task:
+        each worker then sets properties on a copy of its own."""
+        wrap = inheritable_thread_target(self.spark)
+        # without pinned threads there is nothing to copy, and PySpark
+        # hands back the session instead of a decorator
+        return fn if wrap is self.spark else wrap(fn)

@@ -1,5 +1,7 @@
 """Config repository + watermark state store tests."""
 
+import threading
+
 import pytest
 import pandas as pd
 
@@ -65,6 +67,40 @@ def test_state_merge_update_and_insert(tmp_path):
     assert pd.isna(orders_row["SqlUpdatedDate"])
     events_row = df[df["TableName"] == "events"].iloc[0]
     assert not pd.isna(events_row["SqlUpdatedDate"])
+
+
+def test_state_merges_from_two_threads_both_land(tmp_path, monkeypatch):
+    """Two threads merging different tables: each read waits until both
+    have read (or a second passes), so without the lock both would read the
+    empty state and the second write would drop the first row."""
+    st = TableLoadDetails(str(tmp_path / "state.parquet"))
+    both_read = threading.Barrier(2, timeout=1)
+    read = TableLoadDetails._read
+
+    def slow_read(self):
+        df = read(self)
+        try:
+            both_read.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return df
+
+    monkeypatch.setattr(TableLoadDetails, "_read", slow_read)
+    threads = [
+        threading.Thread(
+            target=st.merge,
+            args=("s", "db", t, "2024-01-05"),
+            kwargs={"insert_allowed": True},
+        )
+        for t in ("events", "orders")
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    df = pd.read_parquet(tmp_path / "state.parquet")
+    assert sorted(df["TableName"]) == ["events", "orders"]
+    assert sorted(df["tableloaddetailsid"]) == [1, 2]
 
 
 def test_crypto_roundtrip():

@@ -85,3 +85,47 @@ def test_read_increment_loads_table_once(spark, tmp_path, unit):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert dict(df.dtypes)["updated"].startswith("timestamp")
     assert sorted(r.id for r in df.collect()) == [2, 3, 4]
+
+
+def test_probe_and_increment_share_one_load_per_listing(spark, tmp_path):
+    """The schema probe and the increment read of an unchanged directory
+    load the table once: one Spark job. A file added afterwards changes the
+    listing, so the next read loads again and sees the new rows."""
+    path = tmp_path / "db" / "t.parquet"
+    path.mkdir(parents=True)
+    day = datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array([day, day], pa.timestamp("us"))}),
+        str(path / "part-0.parquet"),
+    )
+    src = FileSource(spark, str(tmp_path))
+    addr = resolve_table("t", task="x")
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    def probe_and_read():
+        src.probe_table("db", addr)
+        return src.read_increment("db", addr, ["ts"], str(day))
+
+    n, df = jobs("probe-and-read", probe_and_read)
+    assert n == 1
+    assert sorted(r.id for r in df.collect()) == [1, 2]
+
+    pq.write_table(
+        pa.table({"id": [3], "ts": pa.array([day], pa.timestamp("us"))}),
+        str(path / "part-1.parquet"),
+    )
+    n, df = jobs(
+        "read-after-add", lambda: src.read_increment("db", addr, ["ts"], str(day))
+    )
+    assert n == 1  # a fresh load
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3]

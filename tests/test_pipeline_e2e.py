@@ -175,3 +175,123 @@ def test_sink_format_seam_passes_orc_through(spark, tmp_path):
 
     files = os.listdir(str(tmp_path / "lake" / "t"))
     assert any(f.endswith(".orc") for f in files), files
+
+
+def _small_orchestrator(spark, root, tasks: dict[str, tuple[str, str]]):
+    """An orchestrator over ``{root}/source``: ``tasks`` maps each task to
+    its (database, comma list of tables)."""
+    config = ConfigRepository(str(root / "meta" / "configvalues.parquet"))
+    for task, (db, tables) in tasks.items():
+        config.insert("dcx_postgresql_db_settings", f"{task}_db_name", db)
+        config.insert("dcx_postgresql_table_settings", f"{task}_tables", tables)
+    audit = AuditLog(path=str(root / "audit" / "logs.jsonl"))
+    return Orchestrator(
+        spark=spark,
+        source=FileSource(spark, str(root / "source")),
+        writer=DatalakeWriter(str(root / "lake"), SinkPolicy()),
+        config=config,
+        state=TableLoadDetails(str(root / "meta" / "state.parquet")),
+        audit=audit,
+        alerts=LogAlertSink(audit=audit),
+    )
+
+
+def _write_source(path, ids, created):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": ids, "createddate": pa.array(created, pa.timestamp("us"))}),
+        str(path / "part-0.parquet"),
+    )
+
+
+def test_run_isolates_failures_and_keeps_config_order_in_audit(spark, tmp_path):
+    """Four tables, two without a source: two failed results and two
+    failure alerts, results in config order, and the audit file holds each
+    table's records together, in config order, exactly as a one-by-one run
+    writes them."""
+    import json
+    from datetime import datetime
+
+    from bigdataingestion_spark.sinks.audit import failure_alert_body
+
+    src = tmp_path / "source" / "analytics"
+    _write_source(src / "t1.parquet", [1, 2], [datetime(2024, 1, 1)] * 2)
+    _write_source(src / "t3.parquet", [1, 2, 3], [datetime(2024, 1, 1)] * 3)
+    orch = _small_orchestrator(
+        spark, tmp_path, {"analytics": ("analytics", "t1,gone2,t3,gone4")}
+    )
+    results = orch.run(run_date=RUN_DATE)
+
+    assert [r.table for r in results] == ["t1", "gone2", "t3", "gone4"]
+    assert [r.strategy for r in results] == [
+        "small-overwrite", "failed", "small-overwrite", "failed",
+    ]
+    assert [r.rows for r in results] == [2, 0, 3, 0]
+    err2, err4 = results[1].error, results[3].error
+    assert "gone2" in err2 and "gone4" in err4
+    assert orch.alerts.sent == [
+        ("table-failure", failure_alert_body("gone2", err2)),
+        ("table-failure", failure_alert_body("gone4", err4)),
+    ]
+
+    def loaded(t, n):
+        return [
+            (f"Processing started for table {t}", 0),
+            (f"Data Load Count From Source - {n}", n),
+            (f"Processing completed for table {t}", 0),
+        ]
+
+    def failed(t, err):
+        return [
+            (f"Processing started for table {t}", 0),
+            (f"Task Failed while executing for Table: {t}, with ERROR: {err}", 0),
+            (f"ALERT [table-failure]: {failure_alert_body(t, err)}", 0),
+        ]
+
+    with open(tmp_path / "audit" / "logs.jsonl", encoding="utf-8") as f:
+        records = [json.loads(line) for line in f]
+    assert {r["notebook"] for r in records} == {"bigdataingestion-spark"}
+    assert [(r["message"], r["record_count"]) for r in records] == (
+        loaded("t1", 2) + failed("gone2", err2) + loaded("t3", 3) + failed("gone4", err4)
+    )
+
+
+def test_entries_sharing_a_lake_dir_and_state_row_load_in_config_order(
+    spark, tmp_path
+):
+    """``a__s.t`` and ``b__u.t`` share the lake directory ``t`` and the state
+    row ``t``: the second entry reads its increment from the state the first
+    one left and its overwrite is the one that stays, as in a one-by-one
+    run."""
+    from datetime import datetime
+
+    day = [datetime(2024, 1, d) for d in range(1, 13)]
+    root = tmp_path
+    _write_source(root / "source" / "dba" / "t.parquet", [1, 2, 3, 4],
+                  [day[0], day[1], day[2], day[9]])
+    _write_source(root / "source" / "dbb" / "t.parquet", [101, 102, 103, 104, 105],
+                  [day[4], day[6], day[7], day[8], day[11]])
+    orch = _small_orchestrator(
+        spark, root, {"a": ("dba", "a__s.t"), "b": ("dbb", "b__u.t")}
+    )
+    system = "databricks_prod_new_workspace"
+    orch.state.merge(system, "sharestory", "t", day[1], insert_allowed=True)
+
+    results = orch.run(run_date=RUN_DATE)
+
+    # a: rows at or after Jan 2 (2, 3, 4); state -> Jan 10 - 80 h.
+    # b: rows at or after Jan 6 16:00 (102..105); state -> Jan 12 - 80 h.
+    assert [(r.strategy, r.rows) for r in results] == [
+        ("small-overwrite", 3), ("small-overwrite", 4),
+    ]
+    assert [r.new_watermark for r in results] == [
+        "2024-01-06 16:00:00", "2024-01-08 16:00:00",
+    ]
+    lake = spark.read.parquet(str(root / "lake" / "t" / "2026" / "08" / "13"))
+    assert sorted(r.id for r in lake.collect()) == [102, 103, 104, 105]
+    assert orch.state.get_last_load_date(system, "sharestory", "t") == (
+        "2024-01-08 16:00:00"
+    )
