@@ -15,7 +15,9 @@ insert clause is ignored; NULL conditions do not fire a clause). The
 reference repo reaches the same shapes through Spark-SQL ``MERGE INTO``
 on its state tables (ING:366-415); this generalizes the two fixed merge
 shapes of ``TxLogTable.merge_upsert`` (source-wins, latest-wins) to
-arbitrary clause lists.
+arbitrary clause lists. ``TxLogTable.delete_matching`` is the list
+``[when_matched_delete()]`` over the source's distinct keys, as Delta
+runs a key delete.
 
 Expression scoping rules (documented on ``TxLogTable.merge``):
 

@@ -3655,9 +3655,8 @@ class TxLogTable:
             )
             return spark.createDataFrame([], schema)
         bounds = self._source_key_bounds(source, keys)
-        cands = self._stats_candidates(snap, bounds, keys, null_safe=False)
-        cands = self._bloom_candidates(
-            spark, snap, source, keys, cands, bounds, null_safe=False
+        cands, _ = self._key_candidates(
+            spark, snap, source, keys, bounds, null_safe=False
         )
         if not cands:
             return self._read_snapshot(spark, snap).limit(0)
@@ -3753,15 +3752,9 @@ class TxLogTable:
             one_pass = False
             tgt = None
             if snap is not None and snap.files:
-                candidates = self._stats_candidates(
-                    snap, src_bounds, keys, null_safe=null_safe
+                candidates, bloom_skipped = self._key_candidates(
+                    spark, snap, source, keys, src_bounds, null_safe
                 )
-                range_kept = len(candidates)
-                candidates = self._bloom_candidates(
-                    spark, snap, source, keys, candidates, src_bounds,
-                    null_safe=null_safe,
-                )
-                bloom_skipped = range_kept - len(candidates)
                 stat_skipped = len(snap.files) - len(candidates)
                 one_pass = self._merge_one_pass_ok(candidates)
                 if not one_pass:
@@ -3925,17 +3918,24 @@ class TxLogTable:
 
         Cost shape at 100 TB — Delta's, clause-aware:
 
-        - files that can hold source keys: min/max + bloom stats prune,
-          one finding scan (exactly :meth:`merge_upsert`'s pass);
-        - files that can hold by-source-qualifying rows: the by-source
-          conditions go through ``skipping.candidate_files`` — an
-          unconditional by-source clause honestly costs a full rewrite
-          scan (it logically touches every non-matched row), a
-          conditioned one prunes like DELETE;
+        - files that can hold source keys: min/max stats, then the bloom
+          probe whenever candidate files carry blooms
+          (:meth:`_key_candidates`, the step :meth:`merge_upsert` uses);
+        - files that can hold by-source-qualifying rows: each by-source
+          condition goes through :meth:`_predicate_candidates` (the
+          DELETE/UPDATE WHERE step) — an unconditional by-source clause
+          honestly costs a full rewrite scan (it logically touches every
+          non-matched row), a conditioned one prunes like DELETE;
         - both finding passes share ONE scan, and only files holding a
           row some clause actually FIRES for are rewritten — a matched
           row whose conditions all evaluate false leaves its file
-          carried by reference.
+          carried by reference;
+        - the resolution joins target and source FULL OUTER when an
+          insert clause exists; matched-only merges join left, as does
+          any merge without an insert clause (a source-only row could
+          only be skipped), so a small source side can broadcast. CDF stages only the change classes whose
+          row count is non-zero. :meth:`delete_matching` is this shape
+          with one unconditional matched delete.
 
         Works on flat AND hive-partitioned tables (rewritten rows
         re-stage into their partition dirs; inserted rows land where
@@ -3984,7 +3984,6 @@ class TxLogTable:
             MergeCardinalityError,
             MergePlan,
         )
-        from bigdataingestion_spark.sinks.skipping import candidate_files
 
         snap = self.snapshot()
         if txn_id is not None and snap and txn_id in snap.txn_ids:
@@ -4058,40 +4057,27 @@ class TxLogTable:
                 if source_key_bounds is not None
                 else self._source_key_bounds(source, keys)
             )
-            key_cands = self._stats_candidates(
-                snap, src_bounds, keys, null_safe=False
+            key_cands, bloom_skipped = self._key_candidates(
+                spark, snap, source, keys, src_bounds, null_safe=False
             )
-            bysrc_cands: set[str] = set()
+            scan_set = set(key_cands)
             for cond in plan.by_source_predicates():
                 if cond is None:
-                    bysrc_cands = set(snap.files)
+                    scan_set = set(snap.files)
                     break
-                cands = candidate_files(
-                    cond, snap.schema_json, snap.files, snap.file_stats,
-                    session_tz=session_tz,
-                )
-                cands = self._bloom_candidates_for_predicate(
-                    spark, snap, cond, cands
-                )
-                bysrc_cands |= set(cands)
-            scan_set = set(key_cands) | bysrc_cands
+                cands, n_bloom = self._predicate_candidates(spark, snap, cond)
+                scan_set |= set(cands)
+                bloom_skipped += n_bloom
             scan_files = [f for f in snap.files if f in scan_set]
-            # the bloom probe (a collect over the source per indexed key
-            # column) can only NARROW an already-one-split scan — below
-            # the one-pass bound it cannot pay for its own job, so probe
-            # only when the stats-pruned candidate set is still wide
-            if not self._merge_one_pass_ok(scan_files):
-                key_cands = self._bloom_candidates(
-                    spark, snap, source, keys, key_cands, src_bounds,
-                    null_safe=False,
-                )
-                scan_set = set(key_cands) | bysrc_cands
-                scan_files = [f for f in snap.files if f in scan_set]
             stat_skipped = len(snap.files) - len(scan_files)
+            # the sum of each step's bloom drops, capped at the files
+            # skipped: exact with one step, an upper bound when a
+            # by-source step keeps a file the key probe dropped
+            bloom_skipped = min(bloom_skipped, stat_skipped)
 
             # ---- finding scan, or the adaptive one-pass fusion ---------
-            # The finding scan exists to keep the full-outer resolution
-            # join off candidate files that hold no key hit. When the
+            # The finding scan exists to keep the resolution join off
+            # candidate files that hold no key hit. When the
             # WHOLE pruned candidate set is at most ~one scan split
             # (_MERGE_ONE_PASS_MAX_BYTES), it cannot shrink any real
             # work — it IS a full extra scheduler round trip (scan +
@@ -4116,16 +4102,21 @@ class TxLogTable:
                 ours = True
             fc = self._fresh_col("_file", [*target_cols, t_mark, s_mark])
             km = self._fresh_col("_km", [*target_cols, fc])
-            if scan_files:
-                tgt = self._read_files(
-                    spark, snap, scan_files, with_file_col=fc
-                )
-            else:
-                tgt = self._read_snapshot(spark, snap).limit(0).withColumn(
-                    fc, F.lit(None).cast("string")
-                )
-            for name, expr in plan.target_markers():
-                tgt = tgt.withColumn(name, expr)
+
+            def marked_target(files: list[str]) -> DataFrame:
+                # the rows of `files`, tagged with their file and the
+                # plan's target markers
+                if files:
+                    df = self._read_files(spark, snap, files, with_file_col=fc)
+                else:
+                    df = self._read_snapshot(spark, snap).limit(0).withColumn(
+                        fc, F.lit(None).cast("string")
+                    )
+                for name, expr in plan.target_markers():
+                    df = df.withColumn(name, expr)
+                return df
+
+            tgt = marked_target(scan_files)
             skeys = source.select(*keys)
             if not source_keys_unique:
                 skeys = skeys.distinct()
@@ -4134,7 +4125,7 @@ class TxLogTable:
             # matched target key makes update/delete ambiguous — and
             # with BY SOURCE clauses present the guard must run even
             # without matched clauses: a by-source rewrite re-stages
-            # matched rows as CARRY, and the full-outer fan-out would
+            # matched rows as CARRY, and the join fan-out would
             # silently DUPLICATE them (insert-only merges are exempt:
             # carry rows are never re-staged there, and Delta inserts
             # duplicate source keys by design)
@@ -4199,20 +4190,7 @@ class TxLogTable:
                 return snap.version
 
             # ---- join + clause resolution ------------------------------
-            if one_pass:
-                hit = tgt  # same read, markers already attached
-            elif candidates_touched:
-                hit = self._read_files(
-                    spark, snap, candidates_touched, with_file_col=fc
-                )
-                for name, expr in plan.target_markers():
-                    hit = hit.withColumn(name, expr)
-            else:
-                hit = self._read_snapshot(spark, snap).limit(0).withColumn(
-                    fc, F.lit(None).cast("string")
-                )
-                for name, expr in plan.target_markers():
-                    hit = hit.withColumn(name, expr)
+            hit = tgt if one_pass else marked_target(candidates_touched)
             src = source
             for name, expr in plan.source_markers():
                 src = src.withColumn(name, expr)
@@ -4222,8 +4200,11 @@ class TxLogTable:
                 c = F.col(f"t.{k}") == F.col(f"s.{k}")
                 jcond = c if jcond is None else jcond & c
             ac = self._fresh_col("_action", [*target_cols, *source.columns, fc])
+            # without an insert clause a source-only row can only resolve
+            # to SKIP, so a left join drops nothing a clause needs, and
+            # lets a small source side broadcast
             joined = (
-                t.join(s, jcond, "full_outer")
+                t.join(s, jcond, "full_outer" if plan.inserts else "left")
                 .withColumn(ac, plan.action_col())
                 .persist()
             )
@@ -4311,25 +4292,34 @@ class TxLogTable:
                 dels = sorted(plan.delete_codes())
                 ins = sorted(plan.insert_codes())
                 cdf_map = {}
-                for name, df_ in (
+                for name, n, df_ in (
                     (
                         "update_preimage",
+                        rows_updated,
                         joined.filter(action.isin(upd)).select(
                             *plan.pre_image_cols()
                         ),
                     ),
                     (
                         "update_postimage",
+                        rows_updated,
                         post.filter(F.col(ac).isin(upd)).drop(ac),
                     ),
                     (
                         "delete",
+                        rows_deleted,
                         joined.filter(action.isin(dels)).select(
                             *plan.pre_image_cols()
                         ),
                     ),
-                    ("insert", post.filter(F.col(ac).isin(ins)).drop(ac)),
+                    (
+                        "insert",
+                        rows_inserted,
+                        post.filter(F.col(ac).isin(ins)).drop(ac),
+                    ),
                 ):
+                    if n == 0:
+                        continue  # act_rows counted no row of this class
                     paths = self._stage_cdf(df_)
                     if paths:
                         cdf_map[name] = paths
@@ -4396,6 +4386,7 @@ class TxLogTable:
                 "files_rewritten": len(touched),
                 "files_carried": len(snap.files) - len(touched),
                 "files_stat_skipped": stat_skipped,
+                "files_bloom_skipped": bloom_skipped,
             },
         )
         self._maybe_auto_compact(spark)
@@ -4408,87 +4399,32 @@ class TxLogTable:
         keys: list[str],
         txn_id: str | None = None,
     ) -> int:
-        """DELETE WHERE (keys) IN (SELECT keys FROM source) — the
-        key-set twin of :meth:`merge_upsert` and the missing half of a
-        CDC apply (a replicated DELETE arrives as a key batch, not a SQL
-        predicate). Same cost shape as MERGE: data-skipping stats drop
-        files whose key range cannot intersect the source's, one finding
-        scan locates the files that DO hold matching keys, only those
-        are rewritten without the matching rows, everything else carries
-        by reference. NULL keys never match (SQL IN semantics). No
-        matching files -> no-op without a commit. CDF materializes the
-        removed rows when enabled."""
-        snap = self.snapshot()
-        if txn_id is not None and snap and txn_id in snap.txn_ids:
-            return snap.version
-        self._require_flat(snap)
-        if snap is None or not snap.files:
-            return snap.version if snap else -1
-        ours = not source.storageLevel.useMemory and not source.storageLevel.useDisk
-        if ours:
-            source = source.persist()
-        try:
-            src_bounds = self._source_key_bounds(source, keys)
-            candidates = self._stats_candidates(
-                snap, src_bounds, keys, null_safe=False
-            )
-            range_kept = len(candidates)
-            candidates = self._bloom_candidates(
-                spark, snap, source, keys, candidates, src_bounds,
-                null_safe=False,
-            )
-            bloom_skipped = range_kept - len(candidates)
-            stat_skipped = len(snap.files) - len(candidates)
-            touched = self._files_with_matching_keys(
-                spark, snap, source, keys, null_safe=False,
-                candidates=candidates,
-            )
-            if not touched:
-                return snap.version
-            base = self._read_files(spark, snap, touched)
-            cdf_on = self._cdf_enabled(snap)
-            if cdf_on:
-                base = base.persist()
-            try:
-                cdf_map = None
-                if cdf_on:
-                    removed = base.join(
-                        source.select(*keys).distinct(), on=keys, how="leftsemi"
-                    )
-                    cdf_map = {"delete": self._stage_cdf(removed)}
-                keep = base.join(
-                    source.select(*keys).distinct(), on=keys, how="left_anti"
-                )
-                files, fstats = self._stage_files(
-                    keep,
-                    write_schema=StructType.fromJson(
-                        json.loads(snap.schema_json)
-                    ),
-                )
-            finally:
-                if cdf_on:
-                    base.unpersist()
-        finally:
-            if ours:
-                source.unpersist()
+        """DELETE WHERE (keys) IN (SELECT keys FROM source) — the missing
+        half of a CDC apply (a replicated DELETE arrives as a key batch,
+        not a SQL predicate). Runs as Delta does, as ``MERGE … WHEN
+        MATCHED THEN DELETE`` through :meth:`merge` over the source's
+        distinct keys, so it prunes, rewrites, stages CDF and commits
+        (op ``merge``, clause ``matched:delete``) exactly like any other
+        merge, flat or partitioned. The distinct keys keep each removed
+        row's CDF ``delete`` record single. NULL keys never match (SQL IN
+        semantics). No matching row -> no commit. Returns the table
+        version, -1 for a table with no commits."""
+        from bigdataingestion_spark.sinks.merge_clauses import (
+            when_matched_delete,
+        )
 
-        return self._commit_reconciled(
-            files,
-            touched,
-            StructType.fromJson(json.loads(snap.schema_json)),
-            "delete",
-            txn_id,
-            snap,
-            read_check=self._key_read_check(src_bounds, keys, False),
-            precomputed_stats=fstats,
-            cdf=cdf_map,
-            metrics={
-                "keys": list(keys),
-                "files_rewritten": len(touched),
-                "files_carried": len(snap.files) - len(touched),
-                "files_stat_skipped": stat_skipped,
-                "files_bloom_skipped": bloom_skipped,
-            },
+        snap = self.snapshot()
+        if snap is None or not snap.files:
+            # nothing to delete; a table with no data files may not even
+            # carry the key columns yet
+            return snap.version if snap else -1
+        return self.merge(
+            spark,
+            source.select(*keys).distinct(),
+            keys,
+            [when_matched_delete()],
+            txn_id=txn_id,
+            source_keys_unique=True,
         )
 
     def _rel_from_uri(self, uri: str) -> str:
@@ -4508,7 +4444,7 @@ class TxLogTable:
 
     def _touched_files(
         self, spark: SparkSession, snap: Snapshot, pred, predicate_str: str
-    ) -> tuple[list[str], int]:
+    ) -> tuple[list[str], int, int]:
         """Files of ``snap`` containing at least one row matching ``pred``
         — log-held stats first (``sinks.skipping`` proves files whose
         min/max cannot satisfy the predicate out of the scan, bailing to
@@ -4521,20 +4457,9 @@ class TxLogTable:
         any row is read. Returns (touched, files_stat_skipped,
         files_bloom_skipped) — bloom_skipped is the subset of stat_skipped
         proven out by bloom sidecars rather than min/max ranges."""
-        from bigdataingestion_spark.sinks.skipping import candidate_files
-
-        candidates = candidate_files(
-            predicate_str,
-            snap.schema_json,
-            snap.files,
-            snap.file_stats,
-            session_tz=spark.conf.get("spark.sql.session.timeZone"),
+        candidates, bloom_skipped = self._predicate_candidates(
+            spark, snap, predicate_str
         )
-        range_kept = len(candidates)
-        candidates = self._bloom_candidates_for_predicate(
-            spark, snap, predicate_str, candidates
-        )
-        bloom_skipped = range_kept - len(candidates)
         skipped = len(snap.files) - len(candidates)
         if not candidates:
             return [], skipped, bloom_skipped
@@ -4690,7 +4615,8 @@ class TxLogTable:
     # filters are built at commit time from the staged files (one extra
     # executor-side pass over the new files only), stored as sidecar
     # ``bloom-<uuid>.json`` blobs referenced from the file's stats entry,
-    # and consulted by merge_upsert/delete_matching BEFORE the finding
+    # and consulted by the key and predicate DML pruning steps
+    # (_key_candidates, _predicate_candidates) BEFORE the finding
     # scan. Hashing is Kirsch-Mitzenmacher double hashing over Spark's
     # xxhash64 (JVM-side, stable across sessions); false positives only
     # cost a wasted scan — never a wrong skip (the absence proof is
@@ -4892,34 +4818,37 @@ class TxLogTable:
             }
         return {rel: self._write_bloom(cols_) for rel, cols_ in per_file.items()}
 
-    def _bloom_candidates(
+    def _key_candidates(
         self,
         spark: SparkSession,
         snap: Snapshot,
         source: DataFrame,
         keys: list[str],
-        candidates: list[str],
         src_bounds: dict,
         null_safe: bool,
-    ) -> list[str]:
-        """Drop candidate files whose bloom PROVES no source key value of
-        some key column occurs in them (a composite match needs equality
-        on every column, so one provably-absent column suffices — the
-        same logic as ``_keys_disjoint``). Files without a bloom, columns
-        without one, and null-matchable columns (null-safe mode with
-        nulls on both sides) stay conservative. The probe set is the
-        source's DISTINCT xxhash64 per indexed column — O(batch keys)
-        longs to the driver, capped at _BLOOM_MAX_PROBE_KEYS."""
-        import base64
-
+    ) -> tuple[list[str], int]:
+        """The key DML pruning step, shared by :meth:`merge_upsert`,
+        :meth:`merge` and :meth:`read_matching_candidates`: min/max stats
+        (:meth:`_stats_candidates`), then drop the candidate files whose
+        bloom PROVES no source key value of some key column occurs in
+        them (a composite match needs equality on every column, so one
+        provably-absent column suffices — the same logic as
+        ``_keys_disjoint``). Files without a bloom, columns without one,
+        and null-matchable columns (null-safe mode with nulls on both
+        sides) stay conservative. The probe set is the source's DISTINCT
+        xxhash64 per indexed column — O(batch keys) longs to the driver,
+        capped at _BLOOM_MAX_PROBE_KEYS — and runs only when some
+        candidate carries a bloom. Returns (candidates, files the bloom
+        probe dropped)."""
         import numpy as np
 
+        candidates = self._stats_candidates(snap, src_bounds, keys, null_safe)
         refs = [
             (f, snap.file_stats.get(f, {}).get("__bloom__"))
             for f in candidates
         ]
         if not any(b for _, b in refs):
-            return candidates
+            return candidates, 0
         src_types = dict(source.dtypes)
         probe: dict[str, np.ndarray] = {}
         for key in keys:
@@ -4936,7 +4865,7 @@ class TxLogTable:
             if 0 < len(hs) <= self._BLOOM_MAX_PROBE_KEYS:
                 probe[key] = np.array(hs, dtype=np.int64).astype(np.uint64)
         if not probe:
-            return candidates
+            return candidates, 0
         # sidecar bitmaps key by PHYSICAL column names (what was staged);
         # probe keys arrive logical — translate via the snapshot schema
         l2p = _l2p(StructType.fromJson(json.loads(snap.schema_json)))
@@ -4944,7 +4873,8 @@ class TxLogTable:
             l2p.get(col, col): (src_types.get(col), hashes)
             for col, hashes in probe.items()
         }
-        return self._bloom_filter_refs(spark, refs, typed)
+        kept = self._bloom_filter_refs(spark, refs, typed)
+        return kept, len(candidates) - len(kept)
 
     def _bloom_filter_refs(
         self, spark: SparkSession, refs: list, probe: dict
@@ -5049,14 +4979,12 @@ class TxLogTable:
                 return True
         return False
 
-    def _bloom_candidates_for_predicate(
-        self,
-        spark: SparkSession,
-        snap: Snapshot,
-        predicate: str,
-        candidates: list[str],
-    ) -> list[str]:
-        """Bloom consult for PREDICATE DML (delete/update WHERE): a
+    def _predicate_candidates(
+        self, spark: SparkSession, snap: Snapshot, predicate: str
+    ) -> tuple[list[str], int]:
+        """The predicate DML pruning step, shared by :meth:`_touched_files`
+        and :meth:`merge`'s by-source clauses: ``skipping.candidate_files``
+        over the log-held min/max stats, then the bloom consult — a
         top-level ``col = lit`` or ``col IN (...)`` term on a
         bloom-indexed column excludes files provably holding none of the
         literals — the point-lookup (GDPR-erasure) shape where min/max
@@ -5068,28 +4996,37 @@ class TxLogTable:
         opened before the probe runs — the shared evaluator handles the
         driver/distributed split. A literal that casts to NULL proves
         nothing. Everything outside the supported term shapes is ignored
-        — skipping stays an optimization, never a correctness filter."""
+        — skipping stays an optimization, never a correctness filter.
+        Returns (candidates, files the bloom consult dropped)."""
         import numpy as np
 
         from bigdataingestion_spark.sinks.skipping import (
             _Bail,
             _Parser,
             _tokenize,
+            candidate_files,
         )
 
+        candidates = candidate_files(
+            predicate,
+            snap.schema_json,
+            snap.files,
+            snap.file_stats,
+            session_tz=spark.conf.get("spark.sql.session.timeZone"),
+        )
         refs = [
             (f, snap.file_stats.get(f, {}).get("__bloom__"))
             for f in candidates
         ]
         if not any(b for _, b in refs):
-            return candidates
+            return candidates, 0
         toks = _tokenize(predicate)
         if toks is None:
-            return candidates
+            return candidates, 0
         try:
             terms = _Parser(toks).parse()
         except _Bail:
-            return candidates
+            return candidates, 0
         # top-level AND conjunction only: each eq/IN term may exclude.
         # Keep the parser's (kind, value) literal tuples — the kind is
         # needed below for the same literal/column compatibility check
@@ -5101,7 +5038,7 @@ class TxLogTable:
             elif t[0] == "in":
                 wanted.setdefault(t[1].lower(), []).extend(t[2])
         if not wanted:
-            return candidates
+            return candidates, 0
         sch = StructType.fromJson(json.loads(snap.schema_json))
         schema_types = {
             f.name.lower(): f.dataType.simpleString() for f in sch.fields
@@ -5173,8 +5110,9 @@ class TxLogTable:
                 ),
             )
         if not probe:
-            return candidates
-        return self._bloom_filter_refs(spark, refs, probe)
+            return candidates, 0
+        kept = self._bloom_filter_refs(spark, refs, probe)
+        return kept, len(candidates) - len(kept)
 
     def _dv_filter(
         self, spark: SparkSession, df: DataFrame, snap: Snapshot, files: list[str]

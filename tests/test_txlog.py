@@ -313,6 +313,80 @@ def test_merge_upsert_resolves_data_and_cdf_once(spark, tmp_path):
         assert row == final[row[0]]
 
 
+def test_delete_matching_is_a_matched_delete_merge(spark, tmp_path):
+    """A key delete runs as MERGE … WHEN MATCHED THEN DELETE over the
+    batch's distinct keys: a key the batch names twice still gives each
+    removed row one CDF delete record, NULL and absent keys commit
+    nothing, and a partitioned table keeps its partition directories."""
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(
+        spark.createDataFrame([(1, "a"), (2, "b"), (2, "b2")], ["id", "v"]).coalesce(1)
+    )
+    t.append(spark.createDataFrame([(3, "c")], ["id", "v"]).coalesce(1))
+    t.alter_properties({"cdf.enabled": "true"})
+    batch = spark.createDataFrame([(2, "x"), (2, "y"), (99, "z")], ["id", "v"])
+    v = t.delete_matching(spark, batch, keys=["id"])
+    assert _rows(t.read(spark)) == [(1, "a"), (3, "c")]
+    e = t.history()[-1]
+    assert e["op"] == "merge" and e["op_metrics"]["clauses"] == ["matched:delete"]
+    assert e["op_metrics"]["rows_deleted"] == 2
+    assert sorted(
+        (r["_change_type"], r["id"], r["v"]) for r in t.read_cdf(spark, v - 1, v).collect()
+    ) == [("delete", 2, "b"), ("delete", 2, "b2")]
+    for absent in (
+        spark.createDataFrame([(None,)], "id bigint"),
+        spark.createDataFrame([(42,)], ["id"]),
+    ):
+        assert t.delete_matching(spark, absent, keys=["id"]) == v
+    assert t.version() == v
+
+    p = TxLogTable(str(tmp_path / "p"))
+    p.overwrite_partitions(
+        spark.createDataFrame([(1, "x"), (2, "x"), (3, "y")], ["id", "part"]),
+        partition_cols=["part"],
+    )
+    p.delete_matching(spark, spark.createDataFrame([(2,)], ["id"]), keys=["id"])
+    assert _rows(p.read(spark)) == [(1, "x"), (3, "y")]
+    assert sorted({f.split("/")[0] for f in p.snapshot().files}) == ["part=x", "part=y"]
+
+
+def test_delete_matching_auto_compacts(spark, tmp_path):
+    t = TxLogTable(str(tmp_path / "t"))
+    for i in range(3):
+        t.append(
+            spark.createDataFrame([(i, "x"), (i + 10, "x")], ["id", "v"]).coalesce(1)
+        )
+    t.alter_properties({"auto.compact.min.files": "2"})
+    t.delete_matching(spark, spark.createDataFrame([(1,)], ["id"]), keys=["id"])
+    assert [e["op"] for e in t.history()[-2:]] == ["merge", "compact"]
+    assert len(t.snapshot().files) == 1
+    assert sorted(r.id for r in t.read(spark).collect()) == [0, 2, 10, 11, 12]
+
+
+def test_delete_only_merge_stages_one_cdf_class(spark, tmp_path, monkeypatch):
+    """CDF classes whose row count is 0 stage no file (and run no job)."""
+    from bigdataingestion_spark.sinks.merge_clauses import when_matched_delete
+
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]))
+    t.alter_properties({"cdf.enabled": "true"})
+    staged = []
+    real = TxLogTable._stage_cdf
+
+    def counting(self, df):
+        staged.append(1)
+        return real(self, df)
+
+    monkeypatch.setattr(TxLogTable, "_stage_cdf", counting)
+    v = t.merge(
+        spark, spark.createDataFrame([(2,)], ["id"]), ["id"], [when_matched_delete()]
+    )
+    assert len(staged) == 1
+    assert [
+        (r["_change_type"], r["id"]) for r in t.read_cdf(spark, v - 1, v).collect()
+    ] == [("delete", 2)]
+
+
 def test_concurrent_writer_conflict(spark, tmp_path):
     t1 = TxLogTable(str(tmp_path / "t"))
     t2 = TxLogTable(str(tmp_path / "t"))

@@ -8,6 +8,8 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pytest
+
 from bigdataingestion_spark.sinks.txlog import TxLogTable
 
 
@@ -61,14 +63,33 @@ def test_minmax_is_blind_but_bloom_skips(spark, tmp_path):
     )
 
 
-def test_bloom_skips_merge_and_result_is_exact(spark, tmp_path):
+def _upsert_by_clauses(t, spark, source, keys):
+    from bigdataingestion_spark.sinks.merge_clauses import (
+        when_matched_update,
+        when_not_matched_insert,
+    )
+
+    return t.merge(
+        spark, source, keys, [when_matched_update(), when_not_matched_insert()]
+    )
+
+
+@pytest.mark.parametrize(
+    "upsert",
+    [
+        lambda t, spark, source, keys: t.merge_upsert(spark, source, keys=keys),
+        _upsert_by_clauses,
+    ],
+    ids=["merge_upsert", "merge"],
+)
+def test_bloom_skips_merge_and_result_is_exact(spark, tmp_path, upsert):
+    """Both key merges prune with the same bloom probe."""
     t, groups = _seed(spark, str(tmp_path / "t"))
     ups = [(k, 999) for k, _ in groups[2][:10]] + [(_uuidish(10**6), 777)]
-    t.merge_upsert(
-        spark, spark.createDataFrame(ups, ["key", "n"]), keys=["key"]
-    )
+    upsert(t, spark, spark.createDataFrame(ups, ["key", "n"]), ["key"])
     m = t.history()[-1]["op_metrics"]
     assert m["files_stat_skipped"] >= 2, m
+    assert m["files_bloom_skipped"] == m["files_stat_skipped"], m
     got = {r.key: r.n for r in t.read(spark).collect()}
     for k, _ in groups[2][:10]:
         assert got[k] == 999

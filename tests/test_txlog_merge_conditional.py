@@ -54,9 +54,12 @@ def test_classic_upsert_via_clauses(spark, tmp_path):
 
 
 def test_clause_order_first_hit_wins_and_conditions_gate(spark, tmp_path):
+    """Also pins an update-only merge (a left join): the source-only key
+    9 changes nothing."""
     t = _base(spark, tmp_path)
     src = spark.createDataFrame(
-        [(1, "x", 5), (2, "y", 200), (3, "z", 30)], ["id", "v", "n"]
+        [(1, "x", 5), (2, "y", 200), (3, "z", 30), (9, "q", 1)],
+        ["id", "v", "n"],
     )
     t.merge(
         spark, src, ["id"],
@@ -74,6 +77,8 @@ def test_clause_order_first_hit_wins_and_conditions_gate(spark, tmp_path):
         (2, "y", 200),  # s.n=200 > 20: first clause
         (3, "c!", 30),  # s.n=30 == 30: second clause (strict >)
     ]
+    m = t.history()[-1]["op_metrics"]
+    assert (m["rows_updated"], m["rows_inserted"]) == (3, 0)
 
 
 def test_matched_delete_with_condition(spark, tmp_path):
