@@ -14,42 +14,23 @@ table-list merge) are reproduced in :class:`ConfigRepository` methods.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
-CONFIG_COLUMNS = ["group_name", "config_name", "config_value", "is_active", "IsEncrypt"]
-
-
-def _empty() -> pd.DataFrame:
-    df = pd.DataFrame(columns=CONFIG_COLUMNS)
-    df["is_active"] = df["is_active"].astype("bool")
-    return df
+from bigdataingestion_spark.config.store import ParquetFileStore
 
 
-class ConfigRepository:
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-
-    def _read(self) -> pd.DataFrame:
-        if os.path.exists(self.path):
-            return pd.read_parquet(self.path)
-        return _empty()
-
-    def _write_atomic(self, df: pd.DataFrame) -> None:
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(self.path) or ".", suffix=".parquet.tmp"
-        )
-        os.close(fd)
-        try:
-            df.to_parquet(tmp, index=False)
-            os.replace(tmp, self.path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+class ConfigRepository(ParquetFileStore):
+    DTYPES = {
+        "group_name": "object",
+        "config_name": "object",
+        "config_value": "object",
+        "is_active": "bool",
+        "IsEncrypt": "object",
+    }
+    SPARK_SCHEMA = (
+        "group_name string, config_name string, config_value string, "
+        "is_active boolean, IsEncrypt string"
+    )
 
     # -- reads ---------------------------------------------------------------
 
@@ -118,28 +99,6 @@ class ConfigRepository:
         m = (df["group_name"] == group_name) & (df["config_name"] == config_name)
         df.loc[m, "config_value"] = config_value
         self._write_atomic(df)
-
-    def to_spark(self, spark: SparkSession) -> DataFrame:
-        pdf = self._read()
-        if pdf.empty:
-            from pyspark.sql.types import (
-                BooleanType,
-                StringType,
-                StructField,
-                StructType,
-            )
-
-            schema = StructType(
-                [
-                    StructField("group_name", StringType()),
-                    StructField("config_name", StringType()),
-                    StructField("config_value", StringType()),
-                    StructField("is_active", BooleanType()),
-                    StructField("IsEncrypt", StringType()),
-                ]
-            )
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(pdf)
 
 
 def merge_tables_list(

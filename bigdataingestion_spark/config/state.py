@@ -26,59 +26,33 @@ MERGE semantics reproduced exactly:
 
 from __future__ import annotations
 
-import os
-import tempfile
 import threading
 from datetime import datetime, timezone
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
-STATE_COLUMNS = [
-    "tableloaddetailsid",
-    "SystemType",
-    "DatabaseName",
-    "TableName",
-    "LastLoadDate",
-    "SqlCreatedDate",
-    "SqlUpdatedDate",
-]
+from bigdataingestion_spark.config.store import ParquetFileStore
 
 
-def _empty_state() -> pd.DataFrame:
-    df = pd.DataFrame(columns=STATE_COLUMNS)
-    df["tableloaddetailsid"] = df["tableloaddetailsid"].astype("int64")
-    for c in ("LastLoadDate", "SqlCreatedDate", "SqlUpdatedDate"):
-        df[c] = pd.to_datetime(df[c])
-    return df
-
-
-class TableLoadDetails:
+class TableLoadDetails(ParquetFileStore):
     """Watermark state with reference-MERGE semantics; thread-safe within
     one process, single-writer across processes."""
 
+    DTYPES = {
+        "tableloaddetailsid": "int64",
+        "SystemType": "object",
+        "DatabaseName": "object",
+        "TableName": "object",
+        "LastLoadDate": "datetime64[ns]",
+        "SqlCreatedDate": "datetime64[ns]",
+        "SqlUpdatedDate": "datetime64[ns]",
+    }
+    SPARK_SCHEMA = (
+        "tableloaddetailsid int, SystemType string, DatabaseName string, "
+        "TableName string, LastLoadDate timestamp, SqlCreatedDate timestamp, "
+        "SqlUpdatedDate timestamp"
+    )
     _merge_lock = threading.Lock()  # serialises every merge's read-modify-write
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-
-    def _read(self) -> pd.DataFrame:
-        if os.path.exists(self.path):
-            return pd.read_parquet(self.path)
-        return _empty_state()
-
-    def _write_atomic(self, df: pd.DataFrame) -> None:
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(self.path) or ".", suffix=".parquet.tmp"
-        )
-        os.close(fd)
-        try:
-            df.to_parquet(tmp, index=False)
-            os.replace(tmp, self.path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
 
     def get_last_load_date(
         self, system_type: str, database: str, table: str
@@ -136,28 +110,3 @@ class TableLoadDetails:
             else:
                 return
             self._write_atomic(df)
-
-    def to_spark(self, spark: SparkSession) -> DataFrame:
-        pdf = self._read()
-        if pdf.empty:
-            from pyspark.sql.types import (
-                IntegerType,
-                StringType,
-                StructField,
-                StructType,
-                TimestampType,
-            )
-
-            schema = StructType(
-                [
-                    StructField("tableloaddetailsid", IntegerType()),
-                    StructField("SystemType", StringType()),
-                    StructField("DatabaseName", StringType()),
-                    StructField("TableName", StringType()),
-                    StructField("LastLoadDate", TimestampType()),
-                    StructField("SqlCreatedDate", TimestampType()),
-                    StructField("SqlUpdatedDate", TimestampType()),
-                ]
-            )
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(pdf)

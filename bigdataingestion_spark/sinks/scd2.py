@@ -1,10 +1,11 @@
-"""SCD2 (slowly-changing-dimension type 2) history tracking over parquet.
+"""SCD2 (slowly-changing-dimension type 2) history tracking on a txlog table.
 
 CDC-style ingestion keeps full history: instead of updating a changed row in
 place (SCD1 = ``TxLogTable.merge_upsert``), the current version is closed
 out (``valid_to`` set) and a new version row opened. Delta implements this
-with MERGE; without table-format jars we emulate with joins + an atomic
-staging swap (same pattern as ``sinks.merge.merge_upsert_ordered``):
+with MERGE; here each fold is joins + ONE ``TxLogTable.overwrite`` commit,
+so readers see the history before or after a fold, never a partial one,
+and a fold that fails before its commit leaves the history untouched:
 
   * unchanged current rows            -> kept as-is
   * current rows whose source differs -> closed (valid_to = change ts)
@@ -12,17 +13,17 @@ staging swap (same pattern as ``sinks.merge.merge_upsert_ordered``):
   * already-closed history            -> untouched
 
 Change detection compares a md5 over the tracked columns (never shuffles the
-full row content).
+full row content). One writer per history: the fold replaces the snapshot
+it read.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigdataingestion_spark.sinks.txlog import TxLogTable
+
 
 def _open_marker():
     # built lazily: Column construction needs an active SparkContext
@@ -47,7 +48,8 @@ def apply_scd2(
     tracked: list[str],
     change_ts: str,
 ) -> None:
-    """Fold one source snapshot into the SCD2 history at ``target_path``.
+    """Fold one source snapshot into the SCD2 history at ``target_path``:
+    the first snapshot is an append, each later fold one overwrite commit.
 
     ``tracked`` are the change-detected attribute columns; ``change_ts`` is
     the effective timestamp literal for this snapshot (ISO string).
@@ -55,14 +57,17 @@ def apply_scd2(
     """
     ts = F.lit(change_ts).cast("timestamp")
     src = _with_hash(source, tracked)
+    table = TxLogTable(target_path)
 
-    if not os.path.exists(target_path):
-        src.drop("_row_hash").withColumn("valid_from", ts).withColumn(
-            "valid_to", _open_marker()
-        ).write.parquet(target_path)
+    if table.snapshot() is None:
+        table.append(
+            src.drop("_row_hash")
+            .withColumn("valid_from", ts)
+            .withColumn("valid_to", _open_marker())
+        )
         return
 
-    hist = spark.read.parquet(target_path)
+    hist = table.read(spark)
     closed = hist.filter(F.col("valid_to").isNotNull())
     current = _with_hash(hist.filter(F.col("valid_to").isNull()), tracked)
 
@@ -102,14 +107,11 @@ def apply_scd2(
         .unionByName(closed_now)
         .unionByName(new_versions)
     )
-    staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.parquet(staging)
-    backup = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
+    table.overwrite(merged)
 
 
 def current_view(spark: SparkSession, target_path: str) -> DataFrame:
     """The SCD1 projection of the history: open rows only."""
-    return spark.read.parquet(target_path).filter(F.col("valid_to").isNull())
+    return (
+        TxLogTable(target_path).read(spark).filter(F.col("valid_to").isNull())
+    )

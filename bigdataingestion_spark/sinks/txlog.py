@@ -4,11 +4,12 @@ The reference writes Delta tables and relies on its transactional DML —
 ``format("delta")`` appends/overwrites with mergeSchema
 (``PostgresToDataLake_Ingestion_Notebook.py:302-306``) and MERGE-into-state
 (``:366-415``). delta-spark is uninstallable in this environment (COVERAGE
-deviation #7), so elsewhere this repo maps 'delta' to plain parquet and
-hand-rolls MERGE semantics (``sinks/merge.py``). That stand-in preserves
-RESULTS but not the transactional properties: a crashed overwrite can leave
-a half-written table, a replayed micro-batch double-appends, and readers
-racing a writer see partial data.
+deviation #7), so the writer's default maps 'delta' to plain parquet.
+That stand-in preserves RESULTS but not the transactional properties: a
+crashed overwrite can leave a half-written table, a replayed micro-batch
+double-appends, and readers racing a writer see partial data. Every
+in-place replace of a lake table (merge, SCD2 fold, compaction) therefore
+goes through this log.
 
 ``TxLogTable`` closes exactly that gap with the same architecture the open
 Delta Lake protocol uses (ordered JSON commit log + immutable data files),
@@ -3672,8 +3673,9 @@ class TxLogTable:
     ) -> int:
         """Copy-on-write MERGE INTO with FILE-LEVEL PRUNING: source-wins
         upsert by ``keys``, or latest-wins by ``order_cols`` when
-        deliveries may be out of order (the latter is
-        ``sinks/merge.py::merge_upsert_ordered``, committed atomically).
+        deliveries may be out of order (per key, the row with the
+        greatest ``order_cols`` across table and source wins — the sink
+        of ``streaming.ingest.stream_cdc_upsert``).
         Only keys present in the source are affected — like Delta's
         MERGE, this never dedups pre-existing duplicate keys the source
         doesn't mention, in ANY mode (a whole-table dedup side effect
@@ -3752,9 +3754,10 @@ class TxLogTable:
             one_pass = False
             tgt = None
             if snap is not None and snap.files:
-                candidates, bloom_skipped = self._key_candidates(
+                candidates, bloom_dropped = self._key_candidates(
                     spark, snap, source, keys, src_bounds, null_safe
                 )
+                bloom_skipped = len(bloom_dropped)
                 stat_skipped = len(snap.files) - len(candidates)
                 one_pass = self._merge_one_pass_ok(candidates)
                 if not one_pass:
@@ -4057,7 +4060,7 @@ class TxLogTable:
                 if source_key_bounds is not None
                 else self._source_key_bounds(source, keys)
             )
-            key_cands, bloom_skipped = self._key_candidates(
+            key_cands, bloom_dropped = self._key_candidates(
                 spark, snap, source, keys, src_bounds, null_safe=False
             )
             scan_set = set(key_cands)
@@ -4065,15 +4068,14 @@ class TxLogTable:
                 if cond is None:
                     scan_set = set(snap.files)
                     break
-                cands, n_bloom = self._predicate_candidates(spark, snap, cond)
+                cands, dropped = self._predicate_candidates(spark, snap, cond)
                 scan_set |= set(cands)
-                bloom_skipped += n_bloom
+                bloom_dropped |= dropped
             scan_files = [f for f in snap.files if f in scan_set]
             stat_skipped = len(snap.files) - len(scan_files)
-            # the sum of each step's bloom drops, capped at the files
-            # skipped: exact with one step, an upper bound when a
-            # by-source step keeps a file the key probe dropped
-            bloom_skipped = min(bloom_skipped, stat_skipped)
+            # a file some step's bloom dropped counts only when no other
+            # step kept it for the scan
+            bloom_skipped = len(bloom_dropped - scan_set)
 
             # ---- finding scan, or the adaptive one-pass fusion ---------
             # The finding scan exists to keep the resolution join off
@@ -4457,9 +4459,10 @@ class TxLogTable:
         any row is read. Returns (touched, files_stat_skipped,
         files_bloom_skipped) — bloom_skipped is the subset of stat_skipped
         proven out by bloom sidecars rather than min/max ranges."""
-        candidates, bloom_skipped = self._predicate_candidates(
+        candidates, bloom_dropped = self._predicate_candidates(
             spark, snap, predicate_str
         )
+        bloom_skipped = len(bloom_dropped)
         skipped = len(snap.files) - len(candidates)
         if not candidates:
             return [], skipped, bloom_skipped
@@ -4838,8 +4841,11 @@ class TxLogTable:
         sides) stay conservative. The probe set is the source's DISTINCT
         xxhash64 per indexed column — O(batch keys) longs to the driver,
         capped at _BLOOM_MAX_PROBE_KEYS — and runs only when some
-        candidate carries a bloom. Returns (candidates, files the bloom
-        probe dropped)."""
+        candidate carries a bloom, and only for key columns the table's
+        ``bloom.columns`` names (sidecars are built from that property,
+        so a probe of any other column is a Spark job with nothing to
+        consult).
+        Returns (candidates, the set of files the bloom probe dropped)."""
         import numpy as np
 
         candidates = self._stats_candidates(snap, src_bounds, keys, null_safe)
@@ -4848,10 +4854,13 @@ class TxLogTable:
             for f in candidates
         ]
         if not any(b for _, b in refs):
-            return candidates, 0
+            return candidates, set()
+        indexed = {c.lower() for c in self._bloom_columns(snap)}
         src_types = dict(source.dtypes)
         probe: dict[str, np.ndarray] = {}
         for key in keys:
+            if key.lower() not in indexed:
+                continue
             if null_safe and (src_bounds.get(key) or {}).get("nulls", 0) > 0:
                 continue  # source nulls can match file nulls: unusable
             hs = [
@@ -4865,7 +4874,7 @@ class TxLogTable:
             if 0 < len(hs) <= self._BLOOM_MAX_PROBE_KEYS:
                 probe[key] = np.array(hs, dtype=np.int64).astype(np.uint64)
         if not probe:
-            return candidates, 0
+            return candidates, set()
         # sidecar bitmaps key by PHYSICAL column names (what was staged);
         # probe keys arrive logical — translate via the snapshot schema
         l2p = _l2p(StructType.fromJson(json.loads(snap.schema_json)))
@@ -4874,7 +4883,7 @@ class TxLogTable:
             for col, hashes in probe.items()
         }
         kept = self._bloom_filter_refs(spark, refs, typed)
-        return kept, len(candidates) - len(kept)
+        return kept, set(candidates) - set(kept)
 
     def _bloom_filter_refs(
         self, spark: SparkSession, refs: list, probe: dict
@@ -4997,7 +5006,8 @@ class TxLogTable:
         driver/distributed split. A literal that casts to NULL proves
         nothing. Everything outside the supported term shapes is ignored
         — skipping stays an optimization, never a correctness filter.
-        Returns (candidates, files the bloom consult dropped)."""
+        Returns (candidates, the set of files the bloom consult
+        dropped)."""
         import numpy as np
 
         from bigdataingestion_spark.sinks.skipping import (
@@ -5019,14 +5029,14 @@ class TxLogTable:
             for f in candidates
         ]
         if not any(b for _, b in refs):
-            return candidates, 0
+            return candidates, set()
         toks = _tokenize(predicate)
         if toks is None:
-            return candidates, 0
+            return candidates, set()
         try:
             terms = _Parser(toks).parse()
         except _Bail:
-            return candidates, 0
+            return candidates, set()
         # top-level AND conjunction only: each eq/IN term may exclude.
         # Keep the parser's (kind, value) literal tuples — the kind is
         # needed below for the same literal/column compatibility check
@@ -5038,7 +5048,7 @@ class TxLogTable:
             elif t[0] == "in":
                 wanted.setdefault(t[1].lower(), []).extend(t[2])
         if not wanted:
-            return candidates, 0
+            return candidates, set()
         sch = StructType.fromJson(json.loads(snap.schema_json))
         schema_types = {
             f.name.lower(): f.dataType.simpleString() for f in sch.fields
@@ -5110,9 +5120,9 @@ class TxLogTable:
                 ),
             )
         if not probe:
-            return candidates, 0
+            return candidates, set()
         kept = self._bloom_filter_refs(spark, refs, probe)
-        return kept, len(candidates) - len(kept)
+        return kept, set(candidates) - set(kept)
 
     def _dv_filter(
         self, spark: SparkSession, df: DataFrame, snap: Snapshot, files: list[str]
@@ -6333,8 +6343,10 @@ class TxLogTable:
         ``zorder_by``, which is a GLOBAL clustering and implies it)
         rewrites every file.
 
-        Unlike ``sinks.compact.compact_path`` (directory swap — the plain
-        parquet path), this goes through the commit protocol: a concurrent
+        A plain parquet directory is adopted first with
+        :meth:`convert_from_parquet`; a single-column ``zorder_by`` is a
+        range clustering on that column. The rewrite goes through the
+        commit protocol: a concurrent
         APPEND that lands first simply serializes before the compaction
         (the rewrite re-commits at the next version, the appended files
         carry through untouched — compaction never clobbers a commit it

@@ -10,8 +10,8 @@ Reference behavior (``PostgresToDataLake_Ingestion_Notebook.py:302-306,
   - ``mergeSchema=true`` on every write (additive schema evolution)
 
 Scale redesign: ``coalesce(1)`` serializes the entire write through one task —
-correct for tiny dimension tables, catastrophic at 100 TB. The policy keeps
-single-file output only below ``small_file_rows`` and otherwise lets AQE size
+correct for tiny dimension tables, catastrophic at 100 TB. The writer keeps
+single-file output only below ``SMALL_FILE_ROWS`` and otherwise lets AQE size
 the files, bounded by ``maxRecordsPerFile``. No delta-spark in this
 environment, so 'delta' maps to parquet physically while preserving the
 format-policy seam (SURVEY.md §7 fallback); the logical format is recorded in
@@ -25,14 +25,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 PARQUET_DOMAINS = ("reliefvet", "appointmentwaitlist")  # reference ING:303
+SMALL_FILE_ROWS = 1_000_000  # below this, compact to one file
+MAX_RECORDS_PER_FILE = 5_000_000
 
 
 @dataclass
 class SinkPolicy:
-    parquet_domains: tuple[str, ...] = PARQUET_DOMAINS
-    small_file_rows: int = 1_000_000  # below this, compact to one file
-    max_records_per_file: int = 5_000_000
-    merge_schema: bool = True
     # opt-in: back 'delta'-format tables with the repo's own transaction
     # log (sinks/txlog.py) instead of bare parquet — restores the atomic
     # replace / idempotent replay / snapshot read semantics the reference
@@ -40,7 +38,7 @@ class SinkPolicy:
     use_txlog: bool = False
 
     def format_for(self, task: str) -> str:
-        return "parquet" if task in self.parquet_domains else "delta"
+        return "parquet" if task in PARQUET_DOMAINS else "delta"
 
 
 @dataclass
@@ -64,14 +62,14 @@ class DatalakeWriter:
         """Write one table/chunk. Returns the physical format used."""
         fmt = self.policy.format_for(task)
         out = df
-        if approx_rows is not None and approx_rows <= self.policy.small_file_rows:
+        if approx_rows is not None and approx_rows <= SMALL_FILE_ROWS:
             out = df.coalesce(1)
         if fmt == "delta" and self.policy.use_txlog:
             from bigdataingestion_spark.sinks.txlog import TxLogTable
 
             table = TxLogTable(path)
             if mode == "append":
-                table.append(out, merge_schema=self.policy.merge_schema)
+                table.append(out)
             else:
                 table.overwrite(out)
             return "txlog"
@@ -79,8 +77,8 @@ class DatalakeWriter:
         writer = (
             out.write.format(physical)
             .mode(mode)
-            .option("mergeSchema", str(self.policy.merge_schema).lower())
-            .option("maxRecordsPerFile", str(self.policy.max_records_per_file))
+            .option("mergeSchema", "true")
+            .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
         )
         writer.save(path)
         return fmt
@@ -103,8 +101,8 @@ class DatalakeWriter:
             df.write.format(physical)
             .mode("overwrite")
             .partitionBy(*partition_cols)
-            .option("mergeSchema", str(self.policy.merge_schema).lower())
-            .option("maxRecordsPerFile", str(self.policy.max_records_per_file))
+            .option("mergeSchema", "true")
+            .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
             .save(path)
         )
         return fmt

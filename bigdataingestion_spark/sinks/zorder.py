@@ -1,13 +1,14 @@
-"""Z-order clustered rewrite: multi-column data skipping for the lake.
+"""Z-order keys: multi-column data skipping for the lake.
 
-``sinks.compact.cluster_rewrite`` sorts lexicographically, which prunes
-scans on the LEADING key only — a filter on the second column still reads
-every file. Z-ordering interleaves the bits of per-column *rank* buckets
-into one space-filling-curve key and range-partitions + sorts by it, so
+A lexicographic sort prunes scans on the LEADING key only — a filter on
+the second column still reads every file. Z-ordering interleaves the bits
+of per-column *rank* buckets into one space-filling-curve key;
+``TxLogTable.compact(zorder_by=...)`` range-partitions + sorts by it, so
 parquet row-group min/max statistics stay narrow on EVERY clustered column
 at once. This is the maintenance job a 100 TB lake runs on its hottest
-filter columns (the same idea behind Delta OPTIMIZE ZORDER BY, built here
-from DataFrame primitives).
+filter columns (Delta OPTIMIZE ZORDER BY, built here from DataFrame
+primitives). With a single column the key is that column's rank bucket,
+so the rewrite is a plain range clustering.
 
 Design for scale:
   * Bucket boundaries are rank-based (``approxQuantile``, one pass, all
@@ -17,17 +18,12 @@ Design for scale:
     (O(2^bits) comparisons per row per column, bits<=6); no Python, no
     window, no extra shuffle beyond the one ``repartitionByRange`` any
     clustered rewrite needs.
-  * The rewrite itself reuses the atomic staging swap of ``compact_path``.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from bigdataingestion_spark.sinks.compact import _dir_bytes, _swap_in
 
 
 def _bucket(col: Column, boundaries: list[float]) -> Column:
@@ -70,29 +66,3 @@ def zorder_key(
                 )
             )
     return z
-
-
-def zorder_rewrite(
-    spark: SparkSession,
-    path: str,
-    cols: list[str],
-    bits: int = 4,
-    num_files: int | None = None,
-    fmt: str = "parquet",
-    target_file_bytes: int = 256 * 1024 * 1024,
-) -> int:
-    """Rewrite ``path`` Z-ordered by ``cols``; returns the file count."""
-    df = spark.read.format(fmt).load(path)
-    parts = num_files or max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
-    keyed = df.withColumn("_z", zorder_key(df, cols, bits=bits))
-    clustered = (
-        keyed.repartitionByRange(parts, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-    def write(staging: str) -> None:
-        clustered.write.format(fmt).save(staging)
-
-    _swap_in(write, path)
-    return parts

@@ -1,49 +1,52 @@
-"""Compaction and clustered-rewrite maintenance jobs."""
+"""Compaction and clustered rewrites: ``TxLogTable.compact`` on plain
+parquet directories adopted with ``convert_from_parquet``."""
 
 from __future__ import annotations
 
-import glob
+import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from bigdataingestion_spark.sinks.compact import cluster_rewrite, compact_path
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 
 
-def _parquet_files(path):
-    return [
-        f
-        for f in glob.glob(f"{path}/**/*.parquet", recursive=True)
-        if "/_" not in f
-    ]
+def _adopt(spark, path):
+    t = TxLogTable.convert_from_parquet(spark, path)
+    size = sum(os.path.getsize(os.path.join(path, f)) for f in t.snapshot().files)
+    return t, size
+
+
+def _live_files(t):
+    return [os.path.join(t.path, f) for f in t.snapshot().files]
 
 
 def test_compact_reduces_file_count(spark, tmp_path):
     path = str(tmp_path / "many")
     spark.range(10_000).repartition(20).write.parquet(path)
-    assert len(_parquet_files(path)) == 20
-    before = spark.read.parquet(path).agg(F.sum("id")).first()[0]
-    n = compact_path(spark, path, target_file_mb=256)
-    assert n == 1
-    assert len(_parquet_files(path)) == 1
-    assert spark.read.parquet(path).agg(F.sum("id")).first()[0] == before
+    t, _ = _adopt(spark, path)
+    assert len(_live_files(t)) == 20
+    before = t.read(spark).agg(F.sum("id")).first()[0]
+    t.compact(spark, full=True)
+    assert t.history()[-1]["op"] == "compact"
+    assert len(_live_files(t)) == 1
+    assert t.read(spark).agg(F.sum("id")).first()[0] == before
 
 
-def test_cluster_rewrite_sorts_by_key(spark, tmp_path):
+def test_single_key_zorder_range_clusters_files(spark, tmp_path):
     path = str(tmp_path / "clustered")
     df = spark.range(10_000).select(
         (F.col("id") * 2654435761 % 10_000).alias("key"), F.col("id").alias("v")
     )
     df.repartition(8).write.parquet(path)
-    cluster_rewrite(spark, path, ["key"], num_files=4)
-    out = spark.read.parquet(path)
+    t, size = _adopt(spark, path)
+    t.compact(spark, target_file_bytes=size // 4, zorder_by=["key"])
+    out = t.read(spark)
     assert out.count() == 10_000
     assert out.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
-    # range clustering: per-file key ranges must be (nearly) disjoint —
-    # check that each file's span is far below the global span
-    import pyarrow.parquet as pq
-
+    # range clustering: per-file key ranges must be disjoint
     spans = []
-    for f in _parquet_files(path):
+    for f in _live_files(t):
         meta = pq.ParquetFile(f)
         stats = [
             meta.metadata.row_group(i).column(0).statistics
@@ -52,6 +55,7 @@ def test_cluster_rewrite_sorts_by_key(spark, tmp_path):
         lo = min(s.min for s in stats)
         hi = max(s.max for s in stats)
         spans.append((lo, hi))
+    assert len(spans) > 1
     spans.sort()
     overlaps = sum(
         1 for (a, b) in zip(spans, spans[1:]) if a[1] > b[0]
@@ -59,54 +63,10 @@ def test_cluster_rewrite_sorts_by_key(spark, tmp_path):
     assert overlaps == 0, f"file key ranges overlap: {spans}"
 
 
-def test_zorder_rewrite_narrows_both_dims(spark, tmp_path):
-    from bigdataingestion_spark.sinks.zorder import zorder_rewrite
-
-    import pyarrow.parquet as pq
-
-    # two independent uniform dims: x = hashed order, y = reversed digits
-    df = spark.range(20_000).select(
-        (F.col("id") * 2654435761 % 20_000).cast("double").alias("x"),
-        (F.col("id") % 97).cast("double").alias("y"),
-        F.col("id").alias("v"),
-    )
-    path = str(tmp_path / "z")
-    df.repartition(8).write.parquet(path)
-
-    def mean_span_frac(col_idx, lo_g, hi_g):
-        fracs = []
-        for f in _parquet_files(path):
-            meta = pq.ParquetFile(f).metadata
-            stats = [
-                meta.row_group(i).column(col_idx).statistics
-                for i in range(meta.num_row_groups)
-            ]
-            lo = min(s.min for s in stats)
-            hi = max(s.max for s in stats)
-            fracs.append((hi - lo) / (hi_g - lo_g))
-        return sum(fracs) / len(fracs)
-
-    # unsorted baseline: every file spans ~the full range on both dims
-    assert mean_span_frac(0, 0, 19999) > 0.9
-    assert mean_span_frac(1, 0, 96) > 0.9
-
-    zorder_rewrite(spark, path, ["x", "y"], bits=4, num_files=16)
-    out = spark.read.parquet(path)
-    assert out.count() == 20_000
-    assert out.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
-    # z-ordered: BOTH dims' per-file spans shrink well below the global span
-    zx = mean_span_frac(0, 0, 19999)
-    zy = mean_span_frac(1, 0, 96)
-    assert zx < 0.5, zx
-    assert zy < 0.5, zy
-
-
 def test_zorder_skewed_column_stays_balanced(spark, tmp_path):
     """90% of x mass on one value: rank-based (approxQuantile) boundaries
     collapse x's hot buckets, but the interleaved y bits still spread rows
     so no output file becomes a hot blob."""
-    from bigdataingestion_spark.sinks.zorder import zorder_rewrite
-
     df = spark.range(10_000).select(
         F.when(F.col("id") % 10 < 9, 0.0)
         .otherwise((F.col("id") % 1000).cast("double"))
@@ -116,14 +76,13 @@ def test_zorder_skewed_column_stays_balanced(spark, tmp_path):
     )
     path = str(tmp_path / "zskew")
     df.repartition(4).write.parquet(path)
-    zorder_rewrite(spark, path, ["x", "y"], bits=4, num_files=8)
-    out = spark.read.parquet(path)
+    t, size = _adopt(spark, path)
+    t.compact(spark, target_file_bytes=size // 8, zorder_by=["x", "y"])
+    out = t.read(spark)
     assert out.count() == 10_000
     assert out.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
-    import pyarrow.parquet as pq
-
     rows_per_file = [
-        pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path)
+        pq.ParquetFile(f).metadata.num_rows for f in _live_files(t)
     ]
     assert max(rows_per_file) < 10_000 * 0.5, rows_per_file
 
@@ -131,8 +90,6 @@ def test_zorder_skewed_column_stays_balanced(spark, tmp_path):
 def test_auto_compact_triggers_on_small_file_threshold(spark, tmp_path):
     """auto.compact.min.files: after a write leaves >= N small files, an
     incremental compact runs post-commit; unset, nothing happens."""
-    from bigdataingestion_spark.sinks.txlog import TxLogTable
-
     t = TxLogTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(0, "x")], ["id", "v"]).coalesce(1))
     t.alter_properties({"auto.compact.min.files": "5"})

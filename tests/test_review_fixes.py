@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from bigdataingestion_spark.config.crypto import decrypt_value, encrypt_value
 from bigdataingestion_spark.sinks.scd2 import apply_scd2, current_view
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 from bigdataingestion_spark.sources.jdbc import JdbcSource
 from bigdataingestion_spark.sources.querygen import resolve_table
 
@@ -27,7 +28,7 @@ def test_scd2_null_shift_detected(spark, tmp_path):
     v2 = spark.createDataFrame([(1, None, "x")], "id int, a string, b string")
     apply_scd2(spark, path, v2, keys=["id"], tracked=["a", "b"],
                change_ts="2024-02-01 00:00:00")
-    hist = spark.read.parquet(path)
+    hist = TxLogTable(path).read(spark)
     assert hist.count() == 2  # closed old version + open new version
     cur = current_view(spark, path).collect()
     assert len(cur) == 1 and cur[0].a is None and cur[0].b == "x"

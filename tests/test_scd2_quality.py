@@ -12,6 +12,7 @@ from bigdataingestion_spark.pipeline.quality import (
     expect_unique,
 )
 from bigdataingestion_spark.sinks.scd2 import apply_scd2, current_view
+from bigdataingestion_spark.sinks.txlog import TxLogTable
 
 
 def test_scd2_lifecycle(spark, tmp_path):
@@ -31,7 +32,7 @@ def test_scd2_lifecycle(spark, tmp_path):
     )
     apply_scd2(spark, path, v2, keys=["id"], tracked=["name", "city"],
                change_ts="2024-02-01 00:00:00")
-    hist = spark.read.parquet(path)
+    hist = TxLogTable(path).read(spark)
     assert hist.count() == 4  # alice open, bob closed + bob open, carol open
     cur = {r.id: r.city for r in current_view(spark, path).collect()}
     assert cur == {1: "NY", 2: "SF", 3: "TX"}
@@ -51,10 +52,55 @@ def test_scd2_lifecycle(spark, tmp_path):
     cur = {r.id for r in current_view(spark, path).collect()}
     assert cur == {1, 3}
     # idempotency: same snapshot again changes nothing
-    before = spark.read.parquet(path).count()
+    before = TxLogTable(path).read(spark).count()
     apply_scd2(spark, path, v3, keys=["id"], tracked=["name", "city"],
                change_ts="2024-03-02 00:00:00")
-    assert spark.read.parquet(path).count() == before
+    assert TxLogTable(path).read(spark).count() == before
+
+
+def test_scd2_fold_failing_at_commit_leaves_history_and_rerun_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A fold that fails at its commit changes nothing readers see: the
+    history still reads as the first snapshot, and re-running the fold
+    gives the history an uninterrupted run gives."""
+    path = str(tmp_path / "dim")
+    v1 = spark.createDataFrame(
+        [(1, "alice", "NY"), (2, "bob", "LA")], ["id", "name", "city"]
+    )
+    v2 = spark.createDataFrame(
+        [(1, "alice", "NY"), (2, "bob", "SF"), (3, "carol", "TX")],
+        ["id", "name", "city"],
+    )
+    fold = dict(keys=["id"], tracked=["name", "city"])
+    apply_scd2(spark, path, v1, change_ts="2024-01-01 00:00:00", **fold)
+    table = TxLogTable(path)
+    first = sorted(map(tuple, table.read(spark).collect()))
+    version = table.version()
+
+    def fail_commit(self, *args, **kwargs):
+        raise RuntimeError("injected crash at commit")
+
+    monkeypatch.setattr(TxLogTable, "_commit", fail_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        apply_scd2(spark, path, v2, change_ts="2024-02-01 00:00:00", **fold)
+    monkeypatch.undo()
+
+    assert table.version() == version
+    assert sorted(map(tuple, table.read(spark).collect())) == first
+
+    apply_scd2(spark, path, v2, change_ts="2024-02-01 00:00:00", **fold)
+    hist = table.read(spark)
+    assert hist.count() == 4
+    cur = {r.id: r.city for r in current_view(spark, path).collect()}
+    assert cur == {1: "NY", 2: "SF", 3: "TX"}
+    assert sorted(
+        (str(r.valid_from), str(r.valid_to), r.city)
+        for r in hist.filter(F.col("id") == 2).collect()
+    ) == [
+        ("2024-01-01 00:00:00", "2024-02-01 00:00:00", "LA"),
+        ("2024-02-01 00:00:00", "None", "SF"),
+    ]
 
 
 def test_orchestrator_quality_gate_isolates_failing_table(spark, tmp_path, sf_smoke_dir):

@@ -122,6 +122,7 @@ def test_stream_cdc_upsert_converges_out_of_order(spark, tmp_path):
     """foreachBatch ordered merge: newest version per key wins even when
     micro-batches deliver versions out of time order, and redelivery is
     idempotent."""
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     src = tmp_path / "cdc_src"
@@ -149,7 +150,7 @@ def test_stream_cdc_upsert_converges_out_of_order(spark, tmp_path):
         order_cols=["ts"],
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(target)
+    out = TxLogTable(target).read(spark)
     assert out.count() == 100
     # keys 0-49 must hold version 2 (newer ts) even if v1's batch ran later
     assert out.filter("k < 50").filter("version <> 2").count() == 0
@@ -161,7 +162,7 @@ def test_stream_cdc_upsert_converges_out_of_order(spark, tmp_path):
         keys=["k"], order_cols=["ts"],
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(target).count() == 100
+    assert TxLogTable(target).read(spark).count() == 100
 
 
 def test_rocksdb_state_store_windowed_counts(spark, tmp_path, landing):
@@ -357,11 +358,10 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
     spark, tmp_path, monkeypatch
 ):
     """Failure injection at the at-least-once hazard: the worker dies AFTER
-    a batch's merge rewrote the lake state but BEFORE the checkpoint
-    recorded the batch. The restart re-delivers that batch; the ordered
-    merge must absorb the replay (same keys, same versions -> same state),
-    never duplicate or regress keys."""
-    from bigdataingestion_spark.sinks import merge as merge_mod
+    a batch's merge committed but BEFORE the checkpoint recorded the
+    batch. The restart re-delivers that batch under the same txn id; the
+    replay must be absorbed, never duplicate or regress keys."""
+    from bigdataingestion_spark.sinks.txlog import TxLogTable
     from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     src = tmp_path / "cdc_src"
@@ -380,7 +380,7 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
     target = str(tmp_path / "cdc_state")
     ckpt = str(tmp_path / "cdc_ckpt")
 
-    real_merge = merge_mod.merge_upsert_ordered
+    real_merge = TxLogTable.merge_upsert
     crashed = []
 
     def crash_after_merge(*args, **kwargs):
@@ -390,7 +390,7 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
             raise RuntimeError("injected crash: merge landed, checkpoint not")
         return out
 
-    monkeypatch.setattr(merge_mod, "merge_upsert_ordered", crash_after_merge)
+    monkeypatch.setattr(TxLogTable, "merge_upsert", crash_after_merge)
     q = stream_cdc_upsert(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
@@ -400,15 +400,15 @@ def test_stream_cdc_upsert_crash_between_merge_and_checkpoint(
     monkeypatch.undo()
 
     # hazard is real: the first batch's merge IS on disk
-    assert crashed and spark.read.parquet(target).count() > 0
+    assert crashed and TxLogTable(target).read(spark).count() > 0
 
-    # restart with the same checkpoint: crashed batch replays through the
-    # merge, remaining batches apply once — state converges exactly
+    # restart with the same checkpoint: the crashed batch's replay is a
+    # txn-id no-op, remaining batches apply once — state converges exactly
     q2 = stream_cdc_upsert(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
     q2.awaitTermination(300)
-    out = spark.read.parquet(target)
+    out = TxLogTable(target).read(spark)
     assert out.count() == 100  # one row per key, no replay duplicates
     assert out.filter("k < 50").filter("version <> 2").count() == 0
     assert out.filter("k >= 50").filter("version <> 1").count() == 0

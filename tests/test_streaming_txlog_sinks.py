@@ -1,6 +1,6 @@
 """txlog-backed streaming sinks (round-6): CDC upsert as atomic
 merge commits and the dead-letter quality gate with txn-id exactly-once
-on both sides — the transactional upgrades of `stream_cdc_upsert` and
+on both sides — `stream_cdc_upsert` and the transactional upgrade of
 `stream_quality_gate`."""
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ def _rows(df):
 
 
 def test_stream_cdc_upsert_txlog_converges_and_replay_noops(spark, tmp_path):
-    from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert_txlog
+    from bigdataingestion_spark.streaming.ingest import stream_cdc_upsert
 
     src = tmp_path / "src"
     # version 2 lands FIRST, version 1 second; maxFilesPerTrigger=1 makes
@@ -36,7 +36,7 @@ def test_stream_cdc_upsert_txlog_converges_and_replay_noops(spark, tmp_path):
     v1.coalesce(1).write.mode("append").parquet(str(src))
 
     target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = stream_cdc_upsert_txlog(
+    q = stream_cdc_upsert(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
     assert q.awaitTermination(180)
@@ -51,7 +51,7 @@ def test_stream_cdc_upsert_txlog_converges_and_replay_noops(spark, tmp_path):
     # checkpoint loss replays every batch: the txn log no-ops each one —
     # NO new commits, not merely a convergent re-merge
     shutil.rmtree(ckpt)
-    q2 = stream_cdc_upsert_txlog(
+    q2 = stream_cdc_upsert(
         spark, str(src), target, ckpt, keys=["k"], order_cols=["ts"]
     )
     assert q2.awaitTermination(180)

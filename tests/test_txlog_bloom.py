@@ -384,3 +384,91 @@ def test_multi_column_bloom_index(spark, tmp_path):
     )
     t.delete_matching(spark, wrong_kb, keys=["ka", "kb"])
     assert t.version() == v
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_key_probe_runs_only_for_indexed_key_columns(spark, tmp_path):
+    """bloom.columns=ka with a composite key (ka, kb): the distinct-hash
+    probe runs for ka alone, since no sidecar indexes kb — the composite
+    key costs the jobs of the ka probe and no more — and ka's bloom still
+    drops the foreign file."""
+    t = TxLogTable(str(tmp_path / "t"))
+    t.alter_properties({"bloom.columns": "ka"})
+    groups = []
+    for g in range(2):
+        rows = [
+            (_uuidish(g * 100 + i), _uuidish(10_000 + g * 100 + i), i)
+            for i in range(60)
+        ]
+        t.append(spark.createDataFrame(rows, ["ka", "kb", "n"]).coalesce(1))
+        groups.append(rows)
+    snap = t.snapshot()
+    batch = spark.createDataFrame(groups[0][:5], ["ka", "kb", "n"])
+
+    def probe(keys):
+        bounds = t._source_key_bounds(batch, keys)
+        return _jobs_in_group(
+            spark,
+            f"key-probe-{'-'.join(keys)}",
+            lambda: t._key_candidates(spark, snap, batch, keys, bounds, False),
+        )
+
+    n_ka, _ = probe(["ka"])
+    n_both, (kept, dropped) = probe(["ka", "kb"])
+    assert n_both == n_ka
+    assert len(kept) == 1 and len(dropped) == 1
+    assert set(kept) | dropped == set(snap.files)
+
+
+def test_merge_bloom_skipped_counts_only_unscanned_files(spark, tmp_path):
+    """A by-source clause can keep a file the key bloom probe dropped:
+    that file is scanned, so it is not bloom-skipped. Four files: A holds
+    the batch's keys; B and C are bloom-dropped by the key probe; D's key
+    range lies above the batch's, so min/max drops it. ``n = 1`` keeps B
+    for the by-source clause, which leaves C as the only file the bloom
+    alone kept out of the scan."""
+    from bigdataingestion_spark.sinks.merge_clauses import (
+        when_matched_update,
+        when_not_matched_by_source_delete,
+    )
+
+    t = TxLogTable(str(tmp_path / "t"))
+    t.alter_properties({"bloom.columns": "ka"})
+    groups = []
+    for g in range(3):
+        rows = [(_uuidish(g * 100 + i), g) for i in range(50)]
+        t.append(spark.createDataFrame(rows, ["ka", "n"]).coalesce(1))
+        groups.append(rows)
+    t.append(
+        spark.createDataFrame(
+            [(f"zz{i:03d}", 3) for i in range(50)], ["ka", "n"]
+        ).coalesce(1)
+    )
+    batch = spark.createDataFrame(groups[0][:5], ["ka", "n"])
+    t.merge(
+        spark,
+        batch,
+        ["ka"],
+        [
+            when_matched_update(),
+            when_not_matched_by_source_delete(condition="n = 1"),
+        ],
+    )
+    m = t.history()[-1]["op_metrics"]
+    assert m["files_stat_skipped"] == 2, m  # C and D
+    assert m["files_bloom_skipped"] == 1, m  # C only
+    assert sorted(
+        r.n for r in t.read(spark).groupBy("n").count().collect()
+    ) == [0, 2, 3]
+    assert t.read(spark).count() == 150
